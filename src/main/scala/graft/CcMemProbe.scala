@@ -12,9 +12,12 @@ import graft.ops.DedupOps
   * and reports its footprint from the block manager — edge rows, cached
   * bytes in memory and on disk, bytes/edge, and the JVM heap — so the
   * SCALE.md sizing rule (E x bytes/edge vs storage-pool budget) rests on
-  * a measured constant instead of a guess. Honors
-  * SPARK_GRAFT_CC_EDGE_LEVEL like the operator, so the governed posture
-  * (serialized / disk-backed cache) is measurable with the same tool.
+  * a measured constant instead of a guess. Reads the storage level the
+  * way the operator does ([[DedupOps.edgeStorageLevel]]), so the governed
+  * posture is measurable with the same probe: pass it as a JVM system
+  * property, e.g. `-Dspark.graft.cc.edgeStorageLevel=DISK_ONLY` (sbt:
+  * `set run / javaOptions += "-D..."`), which the session picks up as a
+  * conf.
   * The output line goes to stdout and, when a path is given, to a file:
   * positional `[outJson]`, or the SPARK_GRAFT_CC_MEM_OUT env var
   * (positional wins when both are set).
@@ -39,7 +42,7 @@ object CcMemProbe {
     val docs = Tables.documents(spark, sfDir)
     val pairs = DedupOps.minhashCandidates(docs)
     val (frame, b, p) = DedupOps.edgeLayout(pairs, 256)
-    val level = DedupOps.edgeStorageLevel
+    val level = DedupOps.edgeStorageLevel(spark)
     val edges = frame.sortWithinPartitions("_eb").persist(level)
     val rows = edges.count()
     val fillSec = (System.nanoTime() - t0) / 1e9

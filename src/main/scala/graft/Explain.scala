@@ -2,15 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan inspector: prints the formatted physical plan for selected catalog
-  * queries (all of them with no args). Used to audit pushdown, broadcast
-  * choice, and whole-stage-codegen coverage per round.
-  *
-  * Runs under [[PlanMode.explainOnly]]: operators that normally return an
-  * eagerly-checkpointed frame (iterative clustering, the PQ/ADC family)
-  * return their composed dataflow instead, so the printed plan shows the
-  * real operators — joins, aggregates, broadcasts — rather than an opaque
-  * `Scan ExistingRDD` over checkpoint blocks.
+/** Executed-plan dump: runs the named catalog queries (all of them with no
+  * args) to the `noop` sink on the SPARK_GRAFT_SF_DIR fixture (default
+  * sf0.001) and prints every query execution each one ran, in order,
+  * with its final (post-AQE) physical plan and observed metrics. That
+  * includes the eager checkpoints and collects inside operators —
+  * every CC round, every trainer checkpoint — so the dump audits
+  * pushdown, broadcast choice and codegen coverage on the plans that
+  * actually executed.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -28,9 +27,17 @@ object Explain {
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       println(s"\n======== $name ========")
-      try PlanMode.explainOnly {
-        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-      } catch { case e: Throwable => println(s"explain failed: $e") }
+      try {
+        val (_, runs) = ExecutedPlans.capture(spark) {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+        }
+        runs.zipWithIndex.foreach { case (r, i) =>
+          println(s"---- [${i + 1}/${runs.size}] ${r.action}")
+          r.observed.foreach { case (k, row) => println(s"observed $k: $row") }
+          println(r.plan.treeString)
+        }
+      } catch { case e: Throwable => println(s"run failed: $e") }
       // drop anything a query registered (caches, checkpoint blocks from
       // trainer collects) so one query's state never colors the next plan
       spark.catalog.clearCache()

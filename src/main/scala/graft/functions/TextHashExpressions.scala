@@ -660,8 +660,11 @@ object TextHashFunctions {
   def ub_keys(text: Column): Column =
     Bridge.column(UnigramBigramKeys(Bridge.expression(text)))
 
+  /** Requires non-ANSI semantics ([[LegacySemantics]]). */
   def unigram_qsum(text: Column,
                    vocab: java.util.HashMap[UTF8String, java.lang.Long],
-                   oovQlp: Long): Column =
+                   oovQlp: Long): Column = {
+    LegacySemantics.check("unigram_qsum")
     Bridge.column(UnigramQsum(Bridge.expression(text), vocab, oovQlp))
+  }
 }

@@ -503,9 +503,12 @@ object VectorFunctions {
   def dot_product(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Codegen'd element-wise 1e6 quantization (see [[QuantizeVec]]). */
-  def quantize_vec(v: Column): Column =
+  /** Codegen'd element-wise 1e6 quantization (see [[QuantizeVec]]).
+    * Requires non-ANSI semantics ([[LegacySemantics]]). */
+  def quantize_vec(v: Column): Column = {
+    LegacySemantics.check("quantize_vec")
     Bridge.column(QuantizeVec(Bridge.expression(v)))
+  }
 
   /** Codegen'd exact Σ(a-b)² over array<bigint> columns. */
   def sq_dist_long(a: Column, b: Column): Column =

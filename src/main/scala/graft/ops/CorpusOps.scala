@@ -438,12 +438,6 @@ object CorpusOps {
     * stratum is its own stratum (null-safe plan join, and the salt
     * coalesces it to a NUL-prefixed sentinel token so its hashes don't
     * collide with the no-stratum spelling of the salt).
-    *
-    * Plan-audit note: the bucket-count pass is an unavoidable driver
-    * collect (the boundary plan IS driver state, bounded at strata×256),
-    * so under [[graft.PlanMode.isExplainOnly]] this op returns the naive
-    * single-window formulation instead — identical output semantics,
-    * no job execution (same guard discipline as dupClusters' loop).
     */
   def exactStratifiedSample(docs: DataFrame, stratumCol: String,
                             idCol: String, k: Int): DataFrame = {
@@ -455,12 +449,6 @@ object CorpusOps {
       col(idCol).cast("string")))
     val hashed = docs.withColumn("_h", h)
       .withColumn("_b", shiftright(col("_h"), 24).cast("int"))
-    if (graft.PlanMode.isExplainOnly) {
-      val wAll = Window.partitionBy(col(stratumCol))
-        .orderBy(col("_h"), col(idCol))
-      return hashed.withColumn("_rk", row_number().over(wAll))
-        .filter(col("_rk") <= k).drop("_rk", "_h", "_b")
-    }
     val counts = hashed.groupBy(col(stratumCol), col("_b"))
       .agg(count(lit(1)).as("_n"))
       .collect()
@@ -576,12 +564,6 @@ object CorpusOps {
     * not — project a map stratum to an explicit string key first; the
     * r12 native-type keying traded implicit map support for correctness
     * on strata whose string casts collide).
-    *
-    * Plan-audit note: the counts pass is a driver collect, so under
-    * [[graft.PlanMode.isExplainOnly]] this op returns the no-cap
-    * fair-share formulation (quota = target/k via a pure-column plan) —
-    * identical plan SHAPE (broadcast join + coin filter), no job
-    * execution (exactStratifiedSample's guard discipline).
     */
   def unimaxRebalance(docs: DataFrame, stratumCol: String, idCol: String,
                       targetTotal: Long, maxEpochs: Double = 1.0)
@@ -609,17 +591,6 @@ object CorpusOps {
         .filter(coin < floor(col("keep_frac") * 4294967296.0).cast("long"))
     val counts = docs.groupBy(col(stratumCol).as("_s"))
       .agg(count(lit(1)).as("n_docs"))
-    if (graft.PlanMode.isExplainOnly) {
-      val k = counts.crossJoin(
-        counts.agg(count(lit(1)).as("_k")))
-      return applyPlan(k
-        .withColumn("quota", round(least(
-          col("n_docs").cast("double") * maxEpochs,
-          lit(targetTotal.toDouble) / col("_k")), 6))
-        .withColumn("keep_frac",
-          least(lit(1.0), col("quota") / col("n_docs")))
-        .select(col("_s"), col("n_docs"), col("quota"), col("keep_frac")))
-    }
     // deterministic walk order, ranked ENGINE-side so the driver never
     // reconstructs native values: ascending capacity, nulls last,
     // string-form tiebreak (the documented order), then the native value

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for large-scale training-data pipelines
   * (north-star ops beyond the reference surface; the reference's own
@@ -17,18 +18,6 @@ import org.apache.spark.sql.functions._
   * keeps the join linear-ish instead of the O(n^2) all-pairs.
   */
 object DedupOps {
-
-  /** Test-only hook: when bound non-null, [[dupClusters]] hands every
-    * round's final (post-AQE) physical-plan string to it right after the
-    * eager checkpoint — the observability handle the plan-shape pin spec
-    * uses (listener-based capture misses the rounds: checkpoint
-    * materialization is an RDD job, not a tracked Dataset action).
-    * Thread-confined (`DynamicVariable.withValue`) so concurrent
-    * dupClusters callers — e.g. parallel test suites — cannot interleave
-    * plan strings from different runs into one pin buffer.
-    */
-  private[graft] val ccPlanHook =
-    new scala.util.DynamicVariable[String => Unit](null)
 
   /** [[bloomDecontaminate]] auto-sizing: bits per distinct eval gram
     * (~10% load at k=3) and the bitset cap (16 MiB as a plan literal). */
@@ -212,8 +201,7 @@ object DedupOps {
     // pipeline (pair-count-sized frame — cheap to hold)
     val est = minhashEstimatedPairs(docs, idCol, textCol, shingleWords,
         k, bands)
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     val sure = est.filter(col("est_jaccard") >= estHi)
       .select(col("doc_a"), col("doc_b"))
     val mid = est.filter(col("est_jaccard") < estHi &&
@@ -806,81 +794,26 @@ object DedupOps {
         col("_bp").getField("bloom_hit").as("bloom_hit"))
   }
 
-  /** Dedup clusters: connected components over candidate pairs by
-    * min-label propagation with pointer doubling — each round every
-    * vertex (1) adopts the smallest label among itself and its neighbors,
-    * then (2) shortcuts through its label's own label
-    * (`label(v) := label(label(v))`, the path-halving step of
-    * Hash-to-Min / GraphX-style CC). Labels are doc ids and only ever
-    * decrease, so the shortcut is always valid and stays inside the
-    * component; with it the propagation distance doubles per round and
-    * the loop converges in O(log(component diameter)) rounds — a
-    * million-hop duplicate chain resolves in ~20. The driver only
-    * coordinates the loop; all data stays distributed. Per-round cost:
-    * one aggregate + join over the edges INCIDENT TO LAST ROUND'S
-    * CHANGED VERTICES (delta messaging — see roundFrame; identical
-    * label trajectory to full messaging, measured-equal outputs) plus
-    * the O(V) doubling self-join, so the dominant edge join shrinks as
-    * components converge instead of re-scanning every edge every
-    * round. The cached edge frame itself is BUCKET-PRUNED in late
-    * rounds: edges carry `_eb = pmod(hash(dst), edgeBuckets)` and are
-    * sorted on it within partitions before caching, so every in-memory
-    * columnar batch holds a narrow `_eb` range; each round collects the
-    * frontier's distinct buckets (driver list bounded by `edgeBuckets`)
-    * and, once the frontier is SPARSE (≤ edgeBuckets/8 buckets — a wide
-    * frontier prunes nothing while still paying per-row evaluation),
-    * filters the next round's edge side with OR-of-`In` chunks of
-    * ≤10 literals — the exact predicate shapes the cached-batch stats
-    * pruner understands (`In`/`Or`; chunking keeps the optimizer from
-    * rewriting to the unsupported `InSet`) — so converged-tail rounds
-    * skip ≥ 7/8 of the cached batches instead of re-reading O(E) rows
-    * per round. The filter is superset-safe (every edge whose
-    * dst is in the frontier hashes into a frontier bucket), so output
-    * and round trajectory are bit-identical to the unpruned loop.
-    * Input pairs
-    * (doc_a < doc_b); output (doc_id, cluster_id = min doc id in the
-    * component). Throws `IllegalStateException` if `maxIter` rounds pass
-    * without convergence rather than returning a wrong clustering.
+  /** The CC edge bucket of a vertex column: `pmod(hash(c), b)`. The one
+    * definition behind both the cached edges' `_eb` tag and the
+    * per-round frontier bitmap, so the frontier's buckets always name
+    * the batches that hold its edges. */
+  private[graft] def edgeBucket(c: Column, b: Int): Column =
+    pmod(hash(c), lit(b))
+
+  /** The CC edge-cache layout, shared by [[dupClusters]] and the
+    * memory-sizing probe (`graft.CcMemProbe`): both edge directions, an
+    * `_eb` bucket tag, hash(dst)-partitioned into exactly P partitions.
+    * Returns (frame, B, P).
     *
-    * Edge-cache memory: the cache holds 2·|pairs| rows of three
-    * numeric columns — measured bytes/edge and the sizing rule live in
-    * SCALE.md §CC memory sizing (probe: `graft.CcMemProbe`). On heaps
-    * below that budget set SPARK_GRAFT_CC_EDGE_LEVEL (see
-    * [[edgeStorageLevel]]) so the fill spills instead of pressuring
-    * execution memory.
-    *
-    * Each round's result is eagerly checkpointed: iterative plans
-    * otherwise nest the previous round's plan (twice, with the doubling
-    * join), so the logical plan — and Catalyst's analysis cost — grows
-    * exponentially with rounds. Checkpointing keeps every round's plan
-    * O(1). When the session has a checkpoint directory configured
-    * (`spark.sparkContext.setCheckpointDir` — the cluster posture), each
-    * round uses RELIABLE `checkpoint()`: round state lives in files, so
-    * an executor loss replays nothing and in-memory block lifecycle is
-    * moot. Without one (local dev), rounds fall back to
-    * `localCheckpoint` and the superseded round's blocks are freed
-    * synchronously each iteration.
-    */
-  /** The CC edge-cache LAYOUT, shared by [[dupClusters]] and the
-    * memory-sizing probe (`graft.CcMemProbe`): both edge directions,
-    * an `_eb` bucket tag, hash(dst)-partitioned into exactly P
-    * partitions. Returns (frame, B, P).
-    *
-    * B is snapped to a MULTIPLE of the session shuffle parallelism P:
-    * _eb = pmod(hash(dst), B) nests inside the partition
-    * (= pmod(hash(dst), P) — same Murmur3 hash on both sides) only when
-    * P | B, and then each partition holds exactly B/P distinct _eb
-    * values, so a within-partition _eb sort gives single-_eb columnar
-    * batches. With the session default P=32 and edgeBuckets=256 the
-    * snap is the identity (B=256).
-    *
-    * The frame is HASH(dst)-PARTITIONED at fill: every CC round joins
-    * the edges on dst, so pre-partitioning pays ONE O(E) shuffle at
-    * fill and deletes the per-round O(E) exchange the join otherwise
-    * re-inserts every iteration (the dominant per-round mover at sf10).
-    * The partition count is pinned to P explicitly — an AQE-coalesced
-    * count would break both the B/P nesting and the claim that
-    * per-round joins reuse this partitioning as-is.
+    * B is snapped to a multiple of the session shuffle parallelism P:
+    * `_eb` nests inside the partition (`pmod(hash(dst), P)`, the same
+    * Murmur3 hash) only when P | B, and then each partition holds
+    * exactly B/P distinct `_eb` values. Partitioning on dst at fill pays
+    * one O(E) shuffle and deletes the per-round O(E) exchange every
+    * round's dst join would otherwise insert; the count is pinned to P
+    * because an AQE-coalesced count would break the nesting and the
+    * reuse.
     */
   private[graft] def edgeLayout(pairs: DataFrame, edgeBuckets: Int)
       : (DataFrame, Int, Int) = {
@@ -889,116 +822,107 @@ object DedupOps {
     val frame = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .withColumn("_eb", pmod(hash(col("dst")), lit(B)))
+      .withColumn("_eb", edgeBucket(col("dst"), B))
       .repartition(P, col("dst"))
     (frame, B, P)
   }
 
-  /** Storage level for the CC edge cache — MEMORY_AND_DISK (the
-    * `Dataset.cache()` default) unless SPARK_GRAFT_CC_EDGE_LEVEL names
-    * another level (`MEMORY_AND_DISK_SER`, `DISK_ONLY`, ...): the
-    * memory-governed posture knob for heaps below the SCALE.md sizing
-    * budget, where keeping the O(E) cache out of the storage pool lets
-    * execution memory breathe (the batch-stat frontier pruning still
-    * applies — batch min/max stats live with the batch regardless of
-    * medium). Output is identical at every level.
-    */
-  private[graft] def edgeStorageLevel
-      : org.apache.spark.storage.StorageLevel =
-    sys.env.get("SPARK_GRAFT_CC_EDGE_LEVEL")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** Session conf naming the CC edge cache's storage level. */
+  val EdgeStorageLevelConf = "spark.graft.cc.edgeStorageLevel"
 
+  /** Storage level for the CC edge cache: the session conf
+    * [[EdgeStorageLevelConf]] (`MEMORY_AND_DISK_SER`, `DISK_ONLY`, ...),
+    * default `MEMORY_AND_DISK`. `DISK_ONLY` is the governed posture for
+    * heaps below the SCALE.md sizing budget; batch stats live with the
+    * batch on any medium, so pruning and output are unchanged.
+    */
+  def edgeStorageLevel(spark: SparkSession): StorageLevel =
+    StorageLevel.fromString(
+      spark.conf.get(EdgeStorageLevelConf, "MEMORY_AND_DISK"))
+
+  /** Dedup clusters: connected components over candidate pairs (doc_a <
+    * doc_b) by min-label propagation with pointer doubling. Output
+    * (doc_id, cluster_id = min doc id in the component). Throws
+    * `IllegalStateException` if `maxIter` rounds pass without
+    * convergence rather than returning a wrong clustering.
+    *
+    *  - Each round every vertex adopts the smallest label among itself
+    *    and its neighbours, then shortcuts through its label's label
+    *    (path halving, as in Hash-to-Min / GraphX CC). Labels only
+    *    decrease and stay inside the component, so the propagation
+    *    distance doubles per round: O(log diameter) rounds.
+    *  - Delta messaging: a round joins only the edges incident to last
+    *    round's changed vertices, so the dominant O(E) join shrinks as
+    *    components converge; the label trajectory is identical to full
+    *    messaging.
+    *  - Bucket pruning: the cached edges carry `_eb` ([[edgeBucket]] of
+    *    dst) and are sorted on it within partitions, so each cached
+    *    batch holds a narrow `_eb` range. Once the frontier is sparse
+    *    (<= B/8 buckets) the next round filters the edge side on the
+    *    frontier's buckets and skips >= 7/8 of the batches. The filter
+    *    is a superset of the needed edges, so output is unchanged.
+    *  - Each round is eagerly checkpointed, or the nested plan (and its
+    *    analysis cost) grows exponentially with rounds. With a session
+    *    checkpoint directory rounds use reliable `checkpoint()` (round
+    *    state survives executor loss); otherwise `localCheckpoint`, and
+    *    the superseded round's blocks are freed each iteration.
+    *
+    * The edge cache holds 2·|pairs| rows; its storage level is the
+    * session conf [[EdgeStorageLevelConf]] (SCALE.md §CC memory sizing).
+    */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
                   edgeBuckets: Int = 256): DataFrame = {
+    val sess = pairs.sparkSession
     // (uppercase names can't bind in a tuple pattern — they'd be read
     // as stable-identifier matches — hence the two-step)
     val layout = edgeLayout(pairs, edgeBuckets)
-    val edgesPlain = layout._1
     val B = layout._2
     val P = layout._3
-    // measurement knob: disable the sparse-frontier edge pruning so its
-    // benefit is A/B-able on the same JVM (output is bit-identical
-    // either way — the filter is superset-safe)
-    val ccNoPrune = sys.env.contains("SPARK_GRAFT_CC_NOPRUNE")
-    def ebOf(c: Column): Column = pmod(hash(c), lit(B))
-    // don't register a cache entry in plan-audit mode (nothing executes).
-    // The within-partition sort on _eb is a LOCAL sort (no shuffle) paid
-    // once at cache fill; it gives every cached columnar batch a tight
-    // _eb min/max so the late-round frontier filter prunes whole batches.
-    val edges =
-      if (graft.PlanMode.isExplainOnly) edgesPlain
-      else edgesPlain.sortWithinPartitions("_eb").persist(edgeStorageLevel)
-    // OR-of-In chunks of <=10 literals: In stays `In` below the InSet
-    // conversion threshold, and In/Or are what the cached-batch stats
-    // pruner supports — one big isin would optimize into InSet and scan
-    // every batch
+    // the within-partition _eb sort is a local sort paid once at fill; it
+    // gives every cached batch the tight _eb min/max the pruning needs
+    val edges = layout._1.sortWithinPartitions("_eb")
+      .persist(edgeStorageLevel(sess))
+    // a wide frontier prunes no batches while the OR-of-In chain still
+    // costs per edge row (measured +10 s on a 14M-edge round whose
+    // frontier spanned 255/256 buckets)
+    def sparse(bs: Array[Int]): Boolean = bs.length <= B / 8
+    // OR-of-In chunks of <= 10 literals: In/Or are what the cached-batch
+    // stats pruner supports, and one big isin would optimize into InSet
+    // and scan every batch
     def bucketPred(bs: Array[Int]): Column =
       bs.grouped(10).map(g =>
         col("_eb").isin(g.map(Int.box).toIndexedSeq: _*))
         .reduce(_ || _)
-    // seed with min(self, neighbors) — the first propagate round for the
-    // price of the vertex-set aggregate (identity seeding would spend a
-    // full join round reaching the same state)
+    // seed with min(self, neighbours): the first propagate round for the
+    // price of the vertex-set aggregate
     def seedFrame = edges.groupBy(col("src"))
       .agg(min(col("dst")).as("_nmin"))
       .select(col("src").as("doc_id"),
         least(col("src"), col("_nmin")).as("cluster_id"))
-    // one propagate+double round over the previous labels, PRE-checkpoint.
-    // DELTA MESSAGING: the nbrMin join runs against `changed` — only the
-    // vertices whose label decreased last round — not the full label set.
-    // Labels are min-monotone, so an UNCHANGED neighbor's label was
-    // already delivered in the round after it last changed and is folded
-    // into labels(v) by induction; per-round labels are therefore
-    // IDENTICAL to full messaging (same trajectory, same round count,
-    // same output) while the dominant O(E) join shrinks with the changed
-    // set — after a couple of rounds only the frontier of long chains is
-    // active. Round 1 passes the whole seed as `changed` (every vertex's
-    // seeded label is news to its neighbors).
+    // one propagate+double round; `changed` holds last round's changed
+    // vertices (round 1: the whole seed)
     def roundFrame(labels: DataFrame, changed: DataFrame,
                    buckets: Option[Array[Int]]): DataFrame = {
-      // engage the filter only when the frontier is SPARSE (<= B/8
-      // buckets): a wide frontier prunes no batches while the OR-of-In
-      // chain still evaluates per edge row — measured +10 s on a 14M-edge
-      // round whose frontier spanned 255/256 buckets. At <= B/8 the
-      // filter is <= 4 In-chunks (cheap per row) and skips >= 7/8 of the
-      // cached batches — the long-tail-chain regime it exists for.
       val edgeSide = buckets match {
-        case Some(bs) if bs.length <= B / 8 && !ccNoPrune =>
-          edges.where(bucketPred(bs))
+        case Some(bs) if sparse(bs) => edges.where(bucketPred(bs))
         case _ => edges
       }
-      // shuffle_hash on the changed side: build the hash map on the
-      // (frontier-bounded) changed set and STREAM the cached edges —
-      // with the cache hash(dst)-partitioned this side of the join has
-      // no exchange AND no sort (the SMJ default would re-sort the full
-      // edge frame every round to join against a frontier)
+      // shuffle_hash builds on the frontier-bounded changed side and
+      // streams the hash(dst)-partitioned cache with no exchange and no
+      // sort (the SMJ default would re-sort every edge every round)
       val nbrMin = edgeSide
         .join(changed.select(col("doc_id").as("dst"),
           col("cluster_id").as("nl")).hint("shuffle_hash"), Seq("dst"))
         .groupBy(col("src").as("doc_id")).agg(min(col("nl")).as("nmin"))
-      // carry the pre-round label through as _old so the convergence
-      // check below is a scan of the already-materialized checkpoint,
-      // not an extra join job per round. The labels checkpoint is
-      // hash(doc_id)-partitioned (see the repartition below), and
-      // nbrMin is small (one row per changed-adjacent vertex), so the
-      // shuffle_hash build on nbrMin leaves the labels side
-      // exchange-free AND sort-free.
+      // the pre-round label rides along as _old, so the frontier is read
+      // off this round's own action instead of an extra join job
       val prop = labels.select(col("doc_id"), col("cluster_id").as("_old"))
         .join(nbrMin.hint("shuffle_hash"), Seq("doc_id"), "left")
         .select(col("doc_id"), col("_old"), least(col("_old"),
           coalesce(col("nmin"), col("_old"))).as("cluster_id"))
-      // pointer doubling: follow the label one more hop. cluster_id is
-      // itself a doc_id present in `prop`, and labels are min-monotone,
-      // so label(label(v)) <= label(v) and is in the same component.
-      // The right (renamed) side is alias-aware: its join key is the
-      // original doc_id attribute, so when prop sits on hash(doc_id)
-      // (checkpoint partitioning) only the LEFT side exchanges. The
-      // shuffle_hash hint is EXPLICIT (r18): under AQE the runtime
-      // already rewrote this to a hash join, but an AQE-off round
-      // (SPARK_GRAFT_CC_ROUND_AQE) would otherwise fall back to the
-      // planner's SortMergeJoin default and pay two per-round O(V)
-      // sorts the round-plan spec pins against.
+      // pointer doubling: label(label(v)) <= label(v), same component.
+      // The explicit shuffle_hash keeps sparse rounds (AQE off, below)
+      // off the planner's SortMergeJoin default and its two O(V) sorts.
       prop.as("l")
         .join(prop.select(col("doc_id").as("cluster_id"),
             col("cluster_id").as("_ll")).as("p").hint("shuffle_hash"),
@@ -1007,105 +931,22 @@ object DedupOps {
           least(col("cluster_id"),
             coalesce(col("_ll"), col("cluster_id"))).as("cluster_id"),
           col("_old"))
-        // partitioning-preserving checkpoint: land each round's state on
-        // hash(doc_id) so next round's prop join (doc_id), the changed
-        // side of the edge join (dst := doc_id, alias-aware), and the
-        // doubling join's renamed right side all reuse the checkpoint's
-        // partitioning instead of re-exchanging O(V) rows per round.
-        // Count pinned to P so it always matches the edge cache's
-        // partitioning (an AQE-chosen count on either side would
-        // re-insert the per-round exchange).
+        // land each round on hash(doc_id) at exactly P partitions, the
+        // edge cache's partitioning, so next round's joins reuse it
+        // instead of re-exchanging O(V) rows
         .repartition(P, col("doc_id"))
     }
-    // plan-audit mode: the loop's checkpoints explain as opaque
-    // `Scan ExistingRDD`; return one round's composed dataflow instead —
-    // the exact per-round operator shape (two joins + agg + double-hop)
-    if (graft.PlanMode.isExplainOnly)
-      return roundFrame(seedFrame, seedFrame, None)
-        .select(col("doc_id"), col("cluster_id"))
-    val reliable =
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame = {
-      val out =
-        if (reliable) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true)
-      // test-only observability (null in production — zero cost): after
-      // the eager materialization the dataset's AQE plan is final; hand
-      // its string to the plan-shape pin spec
-      if (DedupOps.ccPlanHook.value != null)
-        DedupOps.ccPlanHook.value(df.queryExecution.executedPlan.toString)
-      out
-    }
-    var labels = ckpt(seedFrame)
-    // AQE posture for the doubling rounds (r18 optimization, measured):
-    // every degree of freedom AQE could exercise in a round is already
-    // pinned — both joins are hinted shuffle_hash, the edge cache and
-    // the label checkpoints are hash-partitioned at exactly P, and the
-    // round output repartition(P, doc_id) is explicit — so adaptive
-    // re-planning mainly splits each round into one scheduler job per
-    // exchange (a per-round driver barrier tax), while its one real
-    // lever, coalescing the nbrMin groupBy exchange, only matters while
-    // the frontier is WIDE. SPARK_GRAFT_CC_ROUND_AQE ∈ on|off|sparse:
-    // `off` disables AQE for every round, `sparse` only for rounds whose
-    // frontier passed the B/8 pruning gate (the straggler regime, where
-    // nbrMin is a handful of rows and the barrier tax is pure loss),
-    // `on` keeps the session setting. Default from the r18 A/B (2 fresh
-    // JVMs × reps=3, min-combined, sf0.1): `sparse` — five-entry CC
-    // subtotal 12.31 s vs 13.97 (on) / 13.96 (off); the chain probe
-    // takes the full straggler-round win (7.23 → 6.26 s) and the plain
-    // wide-frontier entries keep AQE where it demonstrably helps
-    // (mode=off regressed dedup_apply/_triage by 0.3-0.4 s). Numbers in
-    // OPTIMIZATION_r18.md.
-    // The seed/edge-fill job above always stays adaptive: its upstream
-    // pair pipeline (banding self-join + aggregates) is unpinned and
-    // AQE's runtime join rewrites measurably help it. Restored in the
-    // finally below; output is bit-identical at any setting (execution
-    // strategy only — same trajectory, same labels).
-    val roundAqeMode =
-      sys.env.getOrElse("SPARK_GRAFT_CC_ROUND_AQE", "sparse")
-    val sess = pairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = sess.conf.get(aqeKey)
-    def setRoundAqe(sparseRound: Boolean): Unit = roundAqeMode match {
-      case "off" => sess.conf.set(aqeKey, "false")
-      case "sparse" =>
-        sess.conf.set(aqeKey, if (sparseRound) "false" else aqePrev)
-      case _ => ()
-    }
-    // local mode: the checkpoint whose blocks the current `labels` lives
-    // on; each round frees the superseded one NOW (blocking) — leaving
-    // dead rounds to driver GC + ContextCleaner lets storage balloon
-    // across a long JVM and the resulting concurrent cleanup can race
-    // running tasks. Reliable mode keeps round state in files, not
-    // storage blocks; superseded checkpoint files are reclaimed by the
-    // ContextCleaner (spark.cleaner.referenceTracking.cleanCheckpoints).
-    var current = labels
-    // round 1: every seeded label is news (see roundFrame scaladoc), so
-    // no bucket filter (None = scan all edges)
-    var changedSet = labels
-    var buckets: Option[Array[Int]] = None
-    var i = 0
-    var converged = false
-    // opt-in loop telemetry (SPARK_GRAFT_CC_LOG): per-round wall time and
-    // frontier width on stderr — the observability handle for adjudicating
-    // where a big CC run spends its rounds
-    val ccLog = sys.env.contains("SPARK_GRAFT_CC_LOG")
-    // r19 (guide §2-barriers): the per-round frontier probe rides the
-    // checkpoint-materializing action as OBSERVED METRICS instead of a
-    // separate scan job over the just-written checkpoint. The changed
-    // bucket set is a fixed B-bit bitmap built from ceil(B/64) `bit_or`
-    // aggregates over when(cluster_id < _old) rows — bit_or is idempotent
-    // under recomputation, so the reliable-checkpoint path (whose file
-    // write re-runs the round RDD once more) cannot double-count. One
-    // scheduler job per round now materializes the round AND reports the
-    // frontier; at 100 TB the deleted probe was a full O(V)-partition
-    // barrier per round. The metric node sits above the round's final
-    // exchange and passes partitioning through (CollectMetricsExec
-    // preserves child partitioning), so the checkpoint keeps its
-    // hash(doc_id) layout and every downstream reuse claim holds.
+    val reliable = sess.sparkContext.getCheckpointDir.isDefined
+    def ckpt(df: DataFrame): DataFrame =
+      if (reliable) df.checkpoint(eager = true)
+      else df.localCheckpoint(eager = true)
+    // the frontier's bucket set rides the checkpoint action as a B-bit
+    // bitmap of observed bit_or aggregates, so a round is one job. bit_or
+    // is idempotent, so the reliable path's recompute cannot
+    // double-count; CollectMetricsExec keeps the child partitioning.
     val nWords = (B + 63) / 64
     def frontierObserve(df: DataFrame): DataFrame = {
-      val ebC = pmod(hash(col("doc_id")), lit(B))
+      val ebC = edgeBucket(col("doc_id"), B)
       val chg = col("cluster_id") < col("_old")
       val words = (0 until nWords).map { w =>
         bit_or(when(chg && ebC >= lit(w * 64) && ebC < lit(w * 64 + 64),
@@ -1115,54 +956,47 @@ object DedupOps {
       }
       df.observe("cc_frontier", words.head, words.tail: _*)
     }
-    def frontierFromMetrics(df: DataFrame): Option[Array[Int]] =
-      df.queryExecution.observedMetrics.get("cc_frontier").map { row =>
-        val out = Array.newBuilder[Int]
-        var w = 0
-        while (w < nWords) {
-          val bits = if (row.isNullAt(w)) 0L else row.getLong(w)
-          var b = 0
-          while (b < 64) {
-            if ((bits & (1L << b)) != 0L) out += w * 64 + b
-            b += 1
-          }
-          w += 1
-        }
-        out.result()
-      }
+    def frontierBuckets(df: DataFrame, round: Int): Array[Int] = {
+      val row = df.queryExecution.observedMetrics.getOrElse("cc_frontier",
+        throw new IllegalStateException(
+          s"dupClusters: round $round reported no cc_frontier metric"))
+      val out = Array.newBuilder[Int]
+      for (w <- 0 until nWords; b <- 0 until 64)
+        if (!row.isNullAt(w) && (row.getLong(w) & (1L << b)) != 0L)
+          out += w * 64 + b
+      out.result()
+    }
+    // sparse rounds run with AQE off: every join, partitioning and
+    // partition count is pinned, so adaptive re-planning only splits the
+    // round into one job per exchange, while its one lever (coalescing
+    // the nbrMin exchange) matters only for a wide frontier. Wide rounds
+    // and the seed keep the session setting (OPTIMIZATION_r18.md);
+    // restored in the finally below, output identical either way.
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqePrev = sess.conf.get(aqeKey)
+    var labels = ckpt(seedFrame)
+    // local mode: the checkpoint `labels` lives on; each round frees the
+    // superseded one now, since leaving dead rounds to the ContextCleaner
+    // lets storage balloon and races running tasks
+    var current = labels
+    var changedSet = labels
+    var buckets: Option[Array[Int]] = None
+    var i = 0
+    var converged = false
     try while (!converged && i < maxIter) {
-      val rt0 = System.nanoTime()
-      setRoundAqe(buckets.exists(bs => bs.length <= B / 8 && !ccNoPrune))
+      sess.conf.set(aqeKey,
+        if (buckets.exists(sparse)) "false" else aqePrev)
       val roundDf = frontierObserve(roundFrame(labels, changedSet, buckets))
       val next = ckpt(roundDf)
-      // labels are min-monotone: "changed" == strictly decreased; the
-      // lazy filter below feeds next round's delta-messaging join.
-      val changedRows = next.filter(col("cluster_id") < col("_old"))
-      // read the frontier bitmap off the materializing action; the old
-      // checkpoint-scan probe remains ONLY as a fallback should the
-      // runtime ever fail to report the metric (e.g. an AQE plan shape
-      // the metric collector cannot traverse) — output is identical
-      // either way, the fallback just pays the extra job the metric
-      // deletes
-      val t0 = System.nanoTime()
-      val observed = frontierFromMetrics(roundDf)
-      val frontierBuckets = observed.getOrElse {
-        changedRows
-          .select(ebOf(col("doc_id")).as("_eb")).rdd
-          .mapPartitions(it => it.map(_.getInt(0)).toSet.iterator)
-          .collect().distinct
-      }
-      if (ccLog) System.err.println(
-        f"[dupClusters] round ${i + 1} ${(System.nanoTime() - rt0) / 1e9}%.2f s" +
-          s" (probe ${(System.nanoTime() - t0) / 1e6} ms," +
-          s" observed=${observed.isDefined}," +
-          s" frontier buckets ${frontierBuckets.length}/$B)")
+      val frontier = frontierBuckets(roundDf, i + 1)
       if (!reliable) CheckpointLifecycle.release(current)
       current = next
       labels = next.select(col("doc_id"), col("cluster_id"))
-      changedSet = changedRows.select(col("doc_id"), col("cluster_id"))
-      buckets = Some(frontierBuckets)
-      converged = frontierBuckets.isEmpty
+      // labels are min-monotone: changed == strictly decreased
+      changedSet = next.filter(col("cluster_id") < col("_old"))
+        .select(col("doc_id"), col("cluster_id"))
+      buckets = Some(frontier)
+      converged = frontier.isEmpty
       i += 1
     } finally sess.conf.set(aqeKey, aqePrev)
     edges.unpersist()

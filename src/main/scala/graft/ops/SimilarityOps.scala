@@ -281,15 +281,11 @@ object SimilarityOps {
       cents = cents.map { case (cid, old) => (cid, m.getOrElse(cid, old)) }
     }
     // materialize the k x dim result eagerly so the corpus cache can be
-    // released before returning (a lazy return would pin it forever);
-    // in plan-audit mode return the composed final-update plan instead —
-    // the checkpoint would explain as an opaque `Scan ExistingRDD`
-    val composed = update(cents).select(col("_cid").as("cid"),
-      col("_dim").as("dim"), col("_n").as("n_vecs"),
-      (col("_qc").cast("double") / 1e6).as("centroid"))
-    val result =
-      if (graft.PlanMode.isExplainOnly) composed
-      else composed.localCheckpoint(eager = true)
+    // released before returning (a lazy return would pin it forever)
+    val result = update(cents).select(col("_cid").as("cid"),
+        col("_dim").as("dim"), col("_n").as("n_vecs"),
+        (col("_qc").cast("double") / 1e6).as("centroid"))
+      .localCheckpoint(eager = true)
     base.unpersist()
     result
   }
@@ -713,8 +709,7 @@ object SimilarityOps {
       val a1 = assignIvfPqCells(qcorpus, "_vid", coarse)
         .select(col("_vid"), col("cell").as("_c1"), col("_qv"))
         // feeds sub-init, the sub update, and the final assignment
-        .transform(df => if (graft.PlanMode.isExplainOnly) df
-          else df.localCheckpoint(eager = true))
+        .localCheckpoint(eager = true)
       val subs = broadcast(trainSubCells(a1, k2)
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
@@ -817,8 +812,7 @@ object SimilarityOps {
       val a1 = assignIvfPqCells(qcorpus, "_vid", coarse)
         .select(col("_vid"), col("cell").as("_c1"), col("_qv"))
         // feeds sub-init, the sub update, and the final assignment
-        .transform(df => if (graft.PlanMode.isExplainOnly) df
-          else df.localCheckpoint(eager = true))
+        .localCheckpoint(eager = true)
       val subs: Seq[(Int, Int, Seq[Long])] = trainSubCells(a1, k2)
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
@@ -1307,11 +1301,8 @@ object SimilarityOps {
           round(col("_dist").cast("double") / 1e12, 6).as("approx_dist"),
           col("rnk"))
       // the eager checkpoint materializes before the corpus cache is
-      // released below (a lazy return would compute cache-less later); in
-      // plan-audit mode return the composed ADC dataflow itself — the
-      // checkpoint would explain as an opaque `Scan ExistingRDD`
-      if (graft.PlanMode.isExplainOnly) ranked
-      else ranked.localCheckpoint(eager = true)
+      // released below (a lazy return would compute cache-less later)
+      ranked.localCheckpoint(eager = true)
     } finally if (qcorpusPre.isEmpty) qcorpus.unpersist()
   }
 
@@ -1435,8 +1426,7 @@ object SimilarityOps {
       // checkpoint each side re-runs the argmin assignment over the
       // whole corpus (Spark shares no common subplans). Blocks are
       // swept by the harness' persistent-RDD sweep (CheckpointLifecycle).
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     assigned.as("a").join(assigned.as("b"),
         col("a._cell") === col("b._cell") &&
         col(s"a.$idCol") < col(s"b.$idCol"))
@@ -1512,8 +1502,7 @@ object SimilarityOps {
           qv.as("_qv")),
         "_vid", coarse, "_c1")
       // feeds sub-init, sub update, final argmin, and the payload join
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     val subs: Seq[(Int, Int, Seq[Long])] =
       trainSubCells(a1.select(col("_vid"), col("_c1"), col("_qv")), k2)
         .collect()
@@ -1522,8 +1511,7 @@ object SimilarityOps {
         broadcast(subs.toDF("_c1", "_sub", "_sqc")), k2)
       .select(col("_vid"), col("cell"))
       .join(a1.select(col("_vid"), col("_v"), col("_n")), Seq("_vid"))
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") &&
         col("a._vid") < col("b._vid"))
@@ -1568,8 +1556,7 @@ object SimilarityOps {
           qv.as("_qv")),
         "_vid", cents, "cell")
       .select(col("_vid"), col("_v"), col("_n"), col("cell"))
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     pruneWithinCells(assigned, threshold, idCol)
   }
 
@@ -1608,8 +1595,7 @@ object SimilarityOps {
         "_vid", coarse, "_c1")
       .select(col("_vid"), col("_v"), col("_n"), col("_qv"), col("_c1"))
       // feeds sub-init, sub-assignment, and the final assignment
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     // sub-init: the k2 lowest-id members of each coarse cell
     val wCell = Window.partitionBy(col("_c1")).orderBy(col("_vid"))
     val s0 = broadcast(a1
@@ -1640,8 +1626,7 @@ object SimilarityOps {
     val assigned = subAssign(s1)
       .select(col("_vid"), col("_v"), col("_n"),
         (col("_c1") * k2 + col("_sub")).as("cell"))
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     pruneWithinCells(assigned, threshold, idCol)
   }
 

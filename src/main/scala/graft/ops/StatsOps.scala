@@ -361,8 +361,7 @@ object StatsOps {
     // checkpoint trades a second full input pass for a distinct-keys
     // shuffle read
     val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
-      .transform(c => if (graft.PlanMode.isExplainOnly) c
-        else c.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     val stats = counts.agg(sum(col("cnt")).as("n_total"),
       count(lit(1)).as("n_distinct"), max(col("cnt")).as("max_cnt"))
     counts.orderBy(col("cnt").desc, col(keyCol)).limit(topK)

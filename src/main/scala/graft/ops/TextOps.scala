@@ -187,8 +187,7 @@ object TextOps {
                 textCol: String = "text"): DataFrame = {
     require(dim >= 2, s"dim=$dim")
     val tf = hashedTf(docs, dim, idCol, textCol)
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
     val dfb = tf.groupBy(col("dim_idx")).agg(count(lit(1)).as("_df"))
     val n = tf.agg(countDistinct(col(idCol)).as("_n"))
     val idf = log((lit(1.0) + col("_n")) / (lit(1.0) + col("_df"))) +

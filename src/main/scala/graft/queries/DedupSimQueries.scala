@@ -1347,8 +1347,7 @@ object DedupSimQueries {
         // checkpoint job
         val anchors = {
           val a0 = SimilarityOps.hashSampleAnchors(e, 64)
-          if (graft.PlanMode.isExplainOnly) a0
-          else s.createDataFrame(
+          s.createDataFrame(
             java.util.Arrays.asList(a0.collect(): _*), a0.schema)
         }
         // K staged in its own projection: a col("vec_id") INSIDE the

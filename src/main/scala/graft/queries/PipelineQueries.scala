@@ -54,8 +54,7 @@ object PipelineQueries {
         }
       }
       .toDF("media_id", "ahash")
-      .transform(df => if (graft.PlanMode.isExplainOnly) df
-        else df.localCheckpoint(eager = true))
+      .localCheckpoint(eager = true)
   }
 
   def defs: Map[String, Entry] = Map(

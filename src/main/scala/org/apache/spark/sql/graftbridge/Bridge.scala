@@ -34,6 +34,13 @@ object Bridge {
     org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
 
+  /** Block until the live listener bus has delivered every event posted
+    * so far — after it, a session's `QueryExecutionListener`s have seen
+    * every query that already finished (`listenerBus` is
+    * `private[spark]`). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Idempotently add a planner strategy to a live session — the runtime
     * analog of `SparkSessionExtensions.injectPlannerStrategy` for sessions
     * the caller didn't build (the driver hands us its own session). */

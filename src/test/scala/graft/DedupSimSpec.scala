@@ -725,19 +725,14 @@ class DedupSimSpec extends SparkSpec {
   test("dupClusters round plans pin the r15 shuffle layout: the cached " +
       "edges and checkpointed labels stream through hash-build joins " +
       "with no re-exchange of the edge frame and no per-round sorts") {
-    val plans = scala.collection.mutable.Buffer[String]()
-    try {
-      // withValue thread-confines the hook: a concurrent dupClusters on
-      // another suite's thread sees null, not this buffer
-      DedupOps.ccPlanHook.withValue(p => plans.synchronized { plans += p }) {
-        val pairs = (1L to 33L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-        DedupOps.dupClusters(pairs).collect()
-      }
-    } finally {
-      spark.catalog.clearCache()
-    }
-    // plans(0) is the seed; the rest are doubling rounds (a 33-hop
-    // chain forces several)
+    val pairs = (1L to 33L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val plans =
+      try ExecutedPlans.capture(spark)(DedupOps.dupClusters(pairs))._2
+        .collect { case r if r.action == "localCheckpoint" =>
+          r.plan.toString }
+      finally spark.catalog.clearCache()
+    // plans(0) is the seed checkpoint; the rest are doubling rounds (a
+    // 33-hop chain forces several)
     val rounds = plans.drop(1)
     assert(rounds.size >= 3, s"expected >=3 rounds, got ${plans.size - 1}")
     // tree-text parent walk: operator nesting depth = offset of the
@@ -793,6 +788,28 @@ class DedupSimSpec extends SparkSpec {
     // (AQE stage reuse) rather than re-shuffling the checkpoint
     assert(rounds.map(finalSection).exists(_.contains("ReusedExchange")),
       rounds.headOption.getOrElse(""))
+  }
+
+  test("dupClusters reads every round's frontier off the checkpoint " +
+      "action, in local- and reliable-checkpoint mode alike") {
+    val pairs = (1L to 33L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    def run(action: String): Set[(Long, Long)] = {
+      val (labels, runs) = ExecutedPlans.capture(spark) {
+        DedupOps.dupClusters(pairs).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
+      val rounds = runs.filter(_.action == action).drop(1)
+      assert(rounds.size >= 3, s"$action: ${rounds.size} rounds")
+      assert(rounds.forall(_.observed.contains("cc_frontier")),
+        s"$action: a round reported no cc_frontier metric")
+      labels
+    }
+    val local = run("localCheckpoint")
+    assert(local === (1L to 34L).map(_ -> 1L).toSet)
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try assert(run("checkpoint") === local)
+    finally org.apache.spark.CheckpointDirAccess.reset(spark.sparkContext)
   }
 
   test("extensions inject dot_product at session build (SQL surface)") {
@@ -1313,8 +1330,8 @@ class DedupSimSpec extends SparkSpec {
     } finally banded2.unpersist(blocking = true)
   }
 
-  // keep the reliable-mode tests LAST in the suite: setting a checkpoint
-  // dir flips dupClusters to reliable mode for the rest of this session
+  // a checkpoint dir flips dupClusters to reliable mode for the whole
+  // shared session, so every test that sets one unsets it in a finally
   test("dupClusters under a configured checkpoint dir uses RELIABLE " +
        "checkpoints (cluster posture) and clusters identically") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
@@ -1322,8 +1339,10 @@ class DedupSimSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    val out = DedupOps.dupClusters(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val out =
+      try DedupOps.dupClusters(pairs).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally org.apache.spark.CheckpointDirAccess.reset(spark.sparkContext)
     assert(out === expected)
     assert(out === Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // reliable round state actually hit the checkpoint directory
@@ -1337,6 +1356,11 @@ class DedupSimSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_soak")
       .toString
     spark.sparkContext.setCheckpointDir(dir)
+    try soak()
+    finally org.apache.spark.CheckpointDirAccess.reset(spark.sparkContext)
+  }
+
+  private def soak(): Unit = {
     // 64-hop chain: seeding + multiple pointer-doubling rounds, each a
     // RELIABLE checkpoint — enough rounds that the chaos thread below
     // overlaps the loop, not just its setup

@@ -29,11 +29,37 @@ import graft.ops.DedupOps
   *    boundary batches are bounded by the bucket-boundary count, so the
   *    single-span fraction is the dominant census.
   */
-class EdgeCacheBatchSpec extends SparkSpec {
+class EdgeCacheBatchSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   test("edge cache batches carry single-_eb spans nested in their " +
       "partition (measured from SimpleMetricsCachedBatch stats)") {
-    census(DedupOps.edgeStorageLevel)
+    census(DedupOps.edgeStorageLevel(spark))
+  }
+
+  test("the session conf spark.graft.cc.edgeStorageLevel reaches the " +
+      "edge cache dupClusters fills") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.storage.StorageLevel
+    val key = DedupOps.EdgeStorageLevelConf
+    assert(DedupOps.edgeStorageLevel(spark) === StorageLevel.MEMORY_AND_DISK)
+    val pairs = (1L to 9L).map(i => (i, i + 1))
+    spark.conf.set(key, "DISK_ONLY")
+    val runs =
+      try {
+        assert(DedupOps.edgeStorageLevel(spark) === StorageLevel.DISK_ONLY)
+        ExecutedPlans.capture(spark) {
+          DedupOps.dupClusters(
+            spark.createDataFrame(pairs).toDF("doc_a", "doc_b"))
+        }._2
+      } finally {
+        spark.conf.unset(key)
+        spark.catalog.clearCache()
+      }
+    val levels = runs.flatMap(r =>
+        collect(r.plan) { case s: InMemoryTableScanExec => s })
+      .map(_.relation.cacheBuilder.storageLevel).distinct
+    assert(levels === Seq(StorageLevel.DISK_ONLY), levels)
   }
 
   test("the governed DISK_ONLY posture keeps the same batch stats — " +

@@ -70,17 +70,26 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges <= 2, s"$exchanges exchanges:\n$p")
   }
 
-  test("ivfPqTopK plan audit: under PlanMode.explainOnly the returned " +
-       "plan is the real ADC dataflow (broadcast distance-table join + " +
-       "per-pair aggregate), not an opaque checkpoint scan") {
+  /** Final plans of the eager checkpoints `body` executed — the plans
+    * checkpoint-returning operators actually ran (dupClusters takes the
+    * reliable `checkpoint` when the session has a checkpoint dir). */
+  private def checkpointPlans(body: => Unit): Seq[String] =
+    try ExecutedPlans.capture(spark)(body)._2.collect {
+      case r if r.action == "localCheckpoint" || r.action == "checkpoint" =>
+        r.plan.toString
+    } finally spark.catalog.clearCache()
+
+  test("ivfPqTopK plan audit: the executed result checkpoint is the real " +
+       "ADC dataflow (broadcast distance-table join + per-pair " +
+       "aggregate), not an opaque checkpoint scan") {
     val e = Tables.embeddings(spark, sf)
-    val df = PlanMode.explainOnly {
+    val plans = checkpointPlans {
       graft.ops.SimilarityOps.ivfPqTopK(
         e.filter($"vec_id" < 10), e.filter($"vec_id" >= 10),
         k = 5, dim = 64, nCells = 4, cellIters = 1, m = 4,
         codebookK = 8, pqIters = 1)
     }
-    val p = plan(df)
+    val p = plans.last
     assert(!p.contains("Scan ExistingRDD"), p)
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("HashAggregate"), p)
@@ -88,25 +97,27 @@ class PlanShapeSpec extends SparkSpec {
 
   test("pqTopK plan audit: pre-checkpoint ADC shape visible (no cells)") {
     val e = Tables.embeddings(spark, sf)
-    val df = PlanMode.explainOnly {
+    val plans = checkpointPlans {
       graft.ops.SimilarityOps.pqTopK(
         e.filter($"vec_id" < 10), e.filter($"vec_id" >= 10),
         k = 5, dim = 64, m = 4, codebookK = 8, iters = 1)
     }
-    val p = plan(df)
+    val p = plans.last
     assert(!p.contains("Scan ExistingRDD"), p)
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
-  test("dupClusters plan audit: under PlanMode.explainOnly the returned " +
-       "plan is one propagate+double round (joins + aggregate), not a " +
-       "checkpoint scan") {
+  test("dupClusters plan audit: every executed round checkpoint is one " +
+       "propagate+double round (joins + aggregate over the edge cache)") {
     val pairs = DedupOps.minhashCandidates(Tables.documents(spark, sf))
-    val df = PlanMode.explainOnly { DedupOps.dupClusters(pairs) }
-    val p = plan(df)
-    assert(!p.contains("Scan ExistingRDD"), p)
-    assert(p.toLowerCase.contains("join"), p)
-    assert(p.contains("HashAggregate") || p.contains("SortAggregate"), p)
+    // plans(0) is the seed checkpoint, the rest are rounds
+    val rounds = checkpointPlans(DedupOps.dupClusters(pairs)).drop(1)
+    assert(rounds.nonEmpty)
+    rounds.foreach { p =>
+      assert(p.toLowerCase.contains("join"), p)
+      assert(p.contains("HashAggregate") || p.contains("SortAggregate"), p)
+      assert(p.contains("InMemoryTableScan"), p)
+    }
   }
 
   test("heavyHitters: the sketch aggregates map-side (partial " +

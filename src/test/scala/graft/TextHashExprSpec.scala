@@ -216,4 +216,32 @@ class TextHashExprSpec extends SparkSpec {
     assert(interp === codegen)
     val _ = Bridge // keep import used
   }
+
+  test("quantize_vec and unigram_qsum refuse to build when the session " +
+      "breaks their non-ANSI / legacy sizeOfNull assumptions") {
+    val vocab = new java.util.HashMap[
+      org.apache.spark.unsafe.types.UTF8String, java.lang.Long]()
+    val kernels: Seq[(String, () => Any)] = Seq(
+      "quantize_vec" -> (() => graft.functions.VectorFunctions
+        .quantize_vec(col("v"))),
+      "unigram_qsum" -> (() => TextHashFunctions
+        .unigram_qsum(col("text"), vocab, 0L)))
+    // both build under the session's own (non-ANSI) semantics
+    kernels.foreach(_._2())
+    def expectRefusal(key: String, value: String): Unit = {
+      val prior = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try kernels.foreach { case (name, build) =>
+        val e = intercept[IllegalStateException](build())
+        assert(e.getMessage.contains(name) &&
+          e.getMessage.contains("spark.sql.ansi.enabled=false"),
+          e.getMessage)
+      } finally prior match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+    expectRefusal("spark.sql.ansi.enabled", "true")
+    expectRefusal("spark.sql.legacy.sizeOfNull", "false")
+  }
 }
