@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are written to the `noop` sink — unlike
@@ -23,35 +23,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // memory-governed override: decoupling shuffle partitions from the
-    // thread count (more, smaller partitions on fewer threads) caps the
-    // CONCURRENT per-task memory footprint — the executor-sizing lever a
-    // capped-heap deployment turns first (SCALE.md §CC memory sizing)
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // process-boundary override (see [[BenchMaster]] / SCALE.md §r18)
-    val master = BenchMaster.resolve(s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // The cross-sweep reps protocol runs the whole catalog between the
-      // two samples of any one query. The generated-code cache's default
-      // 100 entries is far below one sweep's stage count, so without this
-      // every timed sample would pay janino recompilation (~100-300 ms per
-      // stage) that the warmup pass already paid — measured as a uniform
-      // ~1.45x inflation across the catalog, including untouched trivial
-      // entries. Sized to hold every stage of a full sweep.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-    val spark = BenchMaster.configure(builder0, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    val counters = new Harness.TaskCounters
+    spark.sparkContext.addSparkListener(counters)
 
     def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Harness.releaseStorage(spark)
       // pay collection OUTSIDE the timers: ~300 query executions in one
       // JVM accrue garbage (broadcast blocks, codegen classes, shuffle
       // buffers) faster than the ContextCleaner's weak-ref GC cadence
@@ -74,23 +51,21 @@ object Bench {
     // codegen compilation (observed 5-10x first-run inflation locally).
     // Warmup failures are ignored here — the same failure will surface,
     // recorded, in the timed run below.
-    // Warmup runs at sf0.01 by default (sf0.001 fallback): r14 per-sample
-    // profiling showed the sf0.001 warmup leaves sf0.1-shape code paths
-    // (AQE join choices, bigger-batch loops) uncompiled, so each entry's
-    // first timed sample carried 1.6-3.4 s of background C2 JIT — timed-
-    // window JIT dropped 168-196 s -> 139-146 s per sweep when warmup
-    // moved to sf0.01 (same-sitting A/B, SCALE.md §r14). Overridable for
-    // A/B via SPARK_GRAFT_WARM_DIR.
-    val warmDir = sys.env.get("SPARK_GRAFT_WARM_DIR")
-      .orElse(Seq("/root/testdata/sf0.01", "/root/testdata/sf0.001")
-        .find(d => new java.io.File(d).isDirectory))
-      .getOrElse("/root/testdata/sf0.001")
-    if (new java.io.File(warmDir).isDirectory)
+    // Warmup runs at sf0.01 (sf0.001 fallback): r14 per-sample profiling
+    // showed the sf0.001 warmup leaves sf0.1-shape code paths (AQE join
+    // choices, bigger-batch loops) uncompiled, so each entry's first
+    // timed sample carried 1.6-3.4 s of background C2 JIT — timed-window
+    // JIT dropped 168-196 s -> 139-146 s per sweep when warmup moved to
+    // sf0.01 (same-sitting A/B, SCALE.md §r14).
+    val warmDir = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.001")
+      .find(d => new java.io.File(d).isDirectory)
+    warmDir.foreach { dir =>
       selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+        try fn(spark, dir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
         finally sweep()
       }
+    }
 
     // min over (reps × passes) timings per query. Two decorrelation axes:
     //  - PASSES: back-to-back runs of the same query inside one sweep —
@@ -104,33 +79,21 @@ object Bench {
     //    the "min-combine >= 2 fresh runs" protocol that used to be
     //    manual discipline.
     // Defaults (reps=2, passes=1) keep total timed work at two
-    // executions per query, decorrelated in time.
+    // executions per query, decorrelated in time; back-to-back passes of
+    // one entry are SPARK_GRAFT_PASSES=N SPARK_GRAFT_BENCH_REPS=1.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "1").toInt
-    // total executions per query = reps x passes. PASSES' default dropped
-    // 2 -> 1 when REPS (default 2) took over decorrelation; a legacy
-    // caller pinning ONLY the old knob still means "passes executions
-    // total", so reps defaults to 1 in that case — the old back-to-back
-    // protocol, preserved like-for-like (and announced on stderr).
-    val legacyPassesOnly = sys.env.contains("SPARK_GRAFT_PASSES") &&
-      !sys.env.contains("SPARK_GRAFT_BENCH_REPS")
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt)
-      .getOrElse(if (legacyPassesOnly) 1 else 2)
-    if (legacyPassesOnly)
-      System.err.println(s"[bench] legacy SPARK_GRAFT_PASSES=$passes " +
-        s"without SPARK_GRAFT_BENCH_REPS: running the old back-to-back " +
-        s"protocol (reps=1, $passes executions per query)")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val samples = scala.collection.mutable
       .LinkedHashMap[String, List[Double]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // SPARK_GRAFT_BENCH_PROFILE: record per-sample (HotSpot JIT ms, GC ms,
-    // janino codegen compilations) deltas alongside each timing, emitted
-    // in the full artifact — the attribution data for cross-JVM per-entry
-    // variance (is a slow sample taxed by background C2 compilation, a GC
-    // landing inside the window despite the pre-sweep System.gc, or a
-    // codegen-cache miss recompiling stages?).
-    val profileOn = sys.env.contains("SPARK_GRAFT_BENCH_PROFILE")
+    // per-sample attribution, read outside the timed window and emitted
+    // in the full artifact: HotSpot JIT ms, GC ms and janino codegen
+    // compilations (is a slow sample taxed by background C2, a GC inside
+    // the window, or a codegen-cache miss?), plus the scheduler shape
+    // from [[Harness.TaskCounters]] — jobs, stages, tasks, Σ task CPU —
+    // the drift-resistant units a per-entry claim can rest on
     val profiles = scala.collection.mutable
-      .LinkedHashMap[String, List[(Long, Long, Long)]]()
+      .LinkedHashMap[String, List[Seq[(String, Long)]]]()
     def jitMs: Long = Option(java.lang.management.ManagementFactory
       .getCompilationMXBean).map(_.getTotalCompilationTime).getOrElse(0L)
     def gcMs: Long = {
@@ -143,19 +106,22 @@ object Bench {
       selected.foreach { case (name, fn) =>
         var pass = 0
         while (pass < passes && !errors.contains(name)) {
-          val (j0, g0, c0) =
-            if (profileOn) (jitMs, gcMs,
-              org.apache.spark.sql.graftbridge.Bridge.codegenCompileCount)
-            else (0L, 0L, 0L)
+          // drained on both sides, like ExecutedPlans.capture: events
+          // of earlier queries never land in this sample's counters
+          Bridge.drainListenerBus(spark)
+          counters.reset()
+          val (j0, g0, c0) = (jitMs, gcMs, Bridge.codegenCompileCount)
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             samples(name) =
               ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(name, Nil)
-            if (profileOn)
-              profiles(name) = (jitMs - j0, gcMs - g0,
-                org.apache.spark.sql.graftbridge.Bridge.codegenCompileCount
-                  - c0) :: profiles.getOrElse(name, Nil)
+            val (j, g, c) = (jitMs - j0, gcMs - g0,
+              Bridge.codegenCompileCount - c0)
+            Bridge.drainListenerBus(spark)
+            profiles(name) = (Seq("jit_ms" -> j, "gc_ms" -> g,
+              "codegen_n" -> c) ++ counters.snapshot) ::
+              profiles.getOrElse(name, Nil)
           } catch {
             case e: Throwable =>
               errors(name) = s"${e.getClass.getName}: " +
@@ -178,17 +144,11 @@ object Bench {
     val spreadMed =
       if (spreads.isEmpty) 0.0 else spreads(spreads.size / 2)
 
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      }
-    val qs = timings.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
+    def obj[V](kvs: Iterable[(String, V)])(v: V => String): String =
+      kvs.map { case (k, x) => Harness.jsonString(k) + ":" + v(x) }
+        .mkString("{", ",", "}")
+    val qs = obj(timings)(_.toString)
+    val errs = obj(errors)(Harness.jsonString)
     val total = timings.values.sum
     // PROD-posture subtotal alongside the all-entries total: probe and
     // ref→twin rows are diagnostics the catalog itself says not to ship
@@ -205,41 +165,16 @@ object Bench {
     println(line)
     // full-resolution artifact: the driver's BENCH_rN.json keeps only the
     // last ~4 KB of stdout, which truncates per-query timings for ~90 of
-    // the catalog's entries — write the complete line to a committed-able
-    // file as well (plus per-entry ALL samples, for spread forensics).
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_full.json")
-    if (outPath.nonEmpty) {
-      val allSamples = samples.collect {
-        case (name, times) if !errors.contains(name) =>
-          "\"" + name + "\":[" + times.reverse.mkString(",") + "]"
-      }.mkString("{", ",", "}")
-      val profJson = if (!profileOn) "" else {
-        val per = profiles.collect {
-          case (name, ps) if !errors.contains(name) =>
-            "\"" + name + "\":[" + ps.reverse.map { case (j, g, c) =>
-              s"""{"jit_ms":$j,"gc_ms":$g,"codegen_n":$c}"""
-            }.mkString(",") + "]"
-        }.mkString("{", ",", "}")
-        s""","profile":$per"""
-      }
-      val full = line.dropRight(1) + s""","samples":$allSamples$profJson}"""
-      // best-effort: the artifact must never fail a run whose queries
-      // all succeeded (e.g. a read-only working directory) — the
-      // stdout line above is the contractual output
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-          (full + "\n").getBytes("UTF-8"))
-        System.err.println(s"[bench] full JSON written to $outPath")
-      } catch {
-        // NonFatal, not just IOException: a malformed SPARK_GRAFT_BENCH_OUT
-        // throws InvalidPathException (runtime) from Paths.get, and
-        // Files.write can throw SecurityException — neither may fail a
-        // run whose queries all succeeded
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] could not write $outPath: $e")
-      }
-    }
+    // the catalog's entries — write the complete line to a file as well,
+    // plus per-entry ALL samples (spread forensics) and their profiles.
+    val ok = samples.keys.filterNot(errors.contains).toSeq
+    val allSamples =
+      obj(ok.map(n => n -> samples(n).reverse))(_.mkString("[", ",", "]"))
+    val profJson = obj(ok.map(n => n -> profiles(n).reverse))(
+      _.map(obj(_)(_.toString)).mkString("[", ",", "]"))
+    Harness.writeArtifact(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json"),
+      line.dropRight(1) + s""","samples":$allSamples,"profile":$profJson}""")
     spark.stop()
     // a failed query must fail the run visibly, not just in the JSON
     if (errors.nonEmpty) sys.exit(1)

@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.DedupOps
 
 /** CC edge-cache memory-sizing probe (`runMain graft.CcMemProbe <sfDir>
@@ -18,25 +14,15 @@ import graft.ops.DedupOps
   * property, e.g. `-Dspark.graft.cc.edgeStorageLevel=DISK_ONLY` (sbt:
   * `set run / javaOptions += "-D..."`), which the session picks up as a
   * conf.
-  * The output line goes to stdout and, when a path is given, to a file:
-  * positional `[outJson]`, or the SPARK_GRAFT_CC_MEM_OUT env var
-  * (positional wins when both are set).
+  * The output line goes to stdout and, when `[outJson]` is given, to
+  * that file.
   */
 object CcMemProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: runMain graft.CcMemProbe <sfDir> [outJson]")
     val sfDir = args(0)
-    val outJson = args.lift(1).orElse(sys.env.get("SPARK_GRAFT_CC_MEM_OUT"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val t0 = System.nanoTime()
     val docs = Tables.documents(spark, sfDir)
@@ -59,9 +45,7 @@ object CcMemProbe {
       s""""heap_bytes":$heap,"storage_level":"${level.description}",""" +
       f""""fill_sec":$fillSec%.2f,"edge_buckets":$b,"partitions":$p}"""
     println(line)
-    outJson.foreach { outPath =>
-      Files.write(Paths.get(outPath), (line + "\n").getBytes("UTF-8"))
-    }
+    args.lift(1).foreach(Harness.writeArtifact(_, line))
     edges.unpersist()
     spark.stop()
   }

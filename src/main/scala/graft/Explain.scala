@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Executed-plan dump: runs the named catalog queries (all of them with no
   * args) to the `noop` sink on the SPARK_GRAFT_SF_DIR fixture (default
   * sf0.001) and prints every query execution each one ran, in order,
@@ -15,14 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
@@ -38,11 +29,8 @@ object Explain {
           println(r.plan.treeString)
         }
       } catch { case e: Throwable => println(s"run failed: $e") }
-      // drop anything a query registered (caches, checkpoint blocks from
-      // trainer collects) so one query's state never colors the next plan
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // one query's caches and checkpoint blocks never color the next plan
+      Harness.releaseStorage(spark)
     }
     spark.stop()
   }

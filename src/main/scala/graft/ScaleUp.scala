@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale a testdata SF directory up by an integer factor for local
@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * a factor-sized duplicate clique; embeddings keep their values (ANN
   * cost depends on counts, not coordinates). Event/order/lineitem keys
   * shift by the observed max so joins stay consistent within each copy.
-  * The optional `bounded` mode (see below) strengthens the de-dup to a
-  * per-copy word bijection for CC scale campaigns where even the residual
-  * cross-copy banding of the suffix mode distorts the edge-count slope.
+  * The optional `boundedconst` mode (see below) strengthens the de-dup
+  * to a per-copy word bijection for CC scale campaigns where even the
+  * residual cross-copy banding of the suffix mode distorts the
+  * edge-count slope.
   */
 object ScaleUp {
   /** boundedconst token space: 4-char base-36 — copy·V + rank must fit. */
@@ -87,63 +88,33 @@ object ScaleUp {
     // happens AFTER the copy fan-out so the injected docs are not
     // themselves near-dup'd across copies.
     val rest = args.drop(3)
-    // optional literal "bounded" (any position after factor): BOUNDED-
-    // CLIQUE copy mode for honest big-decade CC measurements. The default
-    // per-copy suffix token leaves enough shared shingles that copies
-    // band with their originals, so near-dup cliques — and the candidate
-    // PAIR set — grow ~quadratically with the factor (the r15 sf30 CC
-    // cells measured that fixture artifact, not the operator). Bounded
-    // mode instead applies a per-copy WORD BIJECTION (prefix every word
-    // with a copy tag): within-copy shingle sets are isomorphic to the
-    // source's, so within-copy Jaccard — and the near-dup clique profile
-    // — is EXACTLY the source's, while cross-copy Jaccard is 0 (no
-    // shared words → no shared shingles → no banding). Edge count then
-    // grows linearly with the factor and clique size stays constant
-    // (measured: 508 edges at sf0.1 → 5110 at a single-pass ×10).
-    //
-    // The tag must keep the word mapping INJECTIVE across copies AND
-    // across CHAINED ScaleUp passes: a bare "c$i" prefix collides when
-    // passes compose ("c1" + w on a pass-2 copy of an UNTAGGED pass-1
-    // word equals pass-1's own "c1"-tagged word — measured as 2.4x
-    // super-linear edges on a chained sf3b). Hence (a) a per-invocation
-    // nonce (the output dir's basename) namespaces passes, and (b) a
-    // "_" terminator after the copy index prevents "C1" from being a
-    // prefix of "C12" within a pass.
-    val bounded = rest.contains("bounded")
-    // optional literal "boundedconst" (mutually exclusive with
-    // "bounded"): the CONSTANT-LENGTH bounded-clique mode for
-    // byte-honest CC decades. Prefix-mode bounded fixtures inflate
-    // text bytes (a tag per word), so their row-basis exponents need an
-    // arithmetic byte correction (SCALE.md r16). Here EVERY copy
-    // (including copy 0) has every word replaced by the fixed-width
-    // base-36 encoding of (copy * V + rank), where rank comes from a
-    // driver-side sorted-distinct vocabulary pass (fixture vocabularies
-    // are small; guarded below): an EXACT per-copy word bijection —
-    // zero collision risk, within-copy shingle profile isomorphic to
-    // the source's, cross-copy Jaccard 0 — with a constant 4 bytes per
-    // word regardless of factor, copy index or source word length, so
-    // fixture bytes scale exactly linearly with rows and a row-basis
-    // exponent IS the byte-basis exponent. Chained passes compose
-    // safely with no nonce at all: a second pass re-ranks the first
-    // pass's tokens and re-encodes (a bijection of a bijection), so
-    // nothing stacks and no cross-pass collision exists.
+    // optional literal "boundedconst" (any position after factor): the
+    // CONSTANT-LENGTH bounded-clique copy mode for byte-honest CC
+    // decades. The default per-copy suffix token leaves enough shared
+    // shingles that copies band with their originals, so near-dup
+    // cliques — and the candidate PAIR set — grow ~quadratically with
+    // the factor (the r15 sf30 CC cells measured that fixture artifact,
+    // not the operator). Here EVERY copy (including copy 0) has every
+    // word replaced by the fixed-width base-36 encoding of
+    // (copy * V + rank), where rank comes from a driver-side
+    // sorted-distinct vocabulary pass (fixture vocabularies are small;
+    // guarded below): an EXACT per-copy word bijection — zero collision
+    // risk, within-copy shingle profile isomorphic to the source's,
+    // cross-copy Jaccard 0, so edge count grows linearly with the
+    // factor — with a constant 4 bytes per word regardless of factor,
+    // copy index or source word length, so fixture bytes scale exactly
+    // linearly with rows and a row-basis exponent IS the byte-basis
+    // exponent. Chained passes compose safely: a second pass re-ranks
+    // the first pass's tokens and re-encodes (a bijection of a
+    // bijection), so nothing stacks and no cross-pass collision exists.
+    require(!rest.contains("bounded"), "ScaleUp has no prefix-tag " +
+      "'bounded' mode: use 'boundedconst' (byte-honest, no nonce, " +
+      "composes across chained passes)")
     val boundedConst = rest.contains("boundedconst")
-    require(!(bounded && boundedConst),
-      "bounded and boundedconst are mutually exclusive")
-    val boundedTag = new java.io.File(outDir).getName
-    val chainDocs = rest
-      .filterNot(a => a == "bounded" || a == "boundedconst").headOption
+    val chainDocs = rest.filterNot(_ == "boundedconst").headOption
       .map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      "spark.sql.parquet.datetimeRebaseModeInWrite" -> "CORRECTED")
 
     def copies(df: DataFrame, shiftCols: Seq[String],
                perCopy: (DataFrame, Int) => DataFrame = (d, _) => d)
@@ -193,20 +164,6 @@ object ScaleUp {
     write(copies(events, Seq("event_id")), "events")
 
     val documents = spark.read.parquet(s"$inDir/documents.parquet")
-    // prefix-mode injectivity guard: the per-copy word map relies on the
-    // nonce (output basename) being ABSENT from the input vocabulary —
-    // two chained passes whose output dirs share a basename would
-    // silently reintroduce the cross-pass tag collision and the ~2.4x
-    // super-linear edge artifact documented above. Fail fast instead.
-    if (bounded) {
-      val clash = documents
-        .filter(col("text").contains(boundedTag)).limit(1).count()
-      require(clash == 0,
-        s"bounded nonce '$boundedTag' already appears in the input " +
-          "text (a prior pass with the same output basename?): pick a " +
-          "distinct output dir name, or the per-copy word map loses " +
-          "injectivity and edge counts inflate super-linearly")
-    }
     // boundedconst: driver-side vocabulary ranking. 36^4 fixed-width
     // tokens bound copy*V+rank; the require keeps the encoding total.
     val constEnc: Option[org.apache.spark.sql.expressions
@@ -215,8 +172,8 @@ object ScaleUp {
       else {
         val bcast = spark.sparkContext
           .broadcast(constVocabRank(documents, factor))
-        // null-safe: the prefix/suffix modes pass a null text through
-        // via null-propagating SQL builtins; the UDF must match, or one
+        // null-safe: the suffix mode passes a null text through via a
+        // null-propagating SQL builtin; the UDF must match, or one
         // null-text document row crashes the whole scale-up in this
         // mode only
         Some(udf { (text: String, i: Int) =>
@@ -228,9 +185,6 @@ object ScaleUp {
         .withColumn("text", constEnc.get(col("text"), lit(i)))
         .withColumn("n_chars", length(col("text")).cast("long"))
       else if (i == 0) d
-      else if (bounded) d.withColumn("text",
-        array_join(transform(split(col("text"), " "),
-          w => concat(lit(s"${boundedTag}C${i}_"), w)), " "))
       else d.withColumn("text", concat(col("text"), lit(s" rep$i")))
     val docsScaled = copies(documents, Seq("doc_id"), perCopyText)
     val docsOut = if (chainDocs == 0) docsScaled else {

@@ -1,18 +1,16 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingMetrics
 
 /** Steady-state micro-batch latency for the speed layer at the
-  * reference's 30 s publish cadence. [[StreamBench]] measures THROUGHPUT
-  * (AvailableNow drain of a staged file set); this measures the
-  * per-batch processing time a 30 s-trigger deployment observes under a
-  * SUSTAINED input rate — the number that says whether the pipeline
+  * reference's 30 s publish cadence: the per-batch processing time a
+  * 30 s-trigger deployment observes under a SUSTAINED input rate — the number that says whether the pipeline
   * keeps up (p95 batch duration well under the trigger interval = idle
   * headroom; approaching it = backlog forming).
   *
@@ -78,7 +76,7 @@ object StreamLatency {
       s"provider $provider")
     val keyCard = args.lift(5).getOrElse("10000").toLong
     val skip = 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Harness.cpus
     // state shards = shuffle partitions; default ties them to the
     // thread count (the r13-r16 cells), the env override unties them so
     // "more shards" is measurable WITHOUT thread oversubscription — on
@@ -87,29 +85,17 @@ object StreamLatency {
     // the tied layout conflates the two levers past the core count
     val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS",
       cpus.toString).toInt
-    // process-boundary override (see [[BenchMaster]] / SCALE.md §r18):
-    // under local-cluster the state shards spread across real executor
-    // JVMs (one RocksDB instance set per process) and checkpointing
-    // crosses a process boundary to the shared filesystem
-    val master = BenchMaster.resolve(s"local[$cpus]")
-    val builder = BenchMaster.configure(SparkSession.builder(), master)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-    val spark = (if (provider.startsWith("rocksdb")) {
-      val b = builder.config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      if (provider == "rocksdb_changelog")
-        b.config("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-      else b
-    } else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rocksdb = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val changelog = "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled" -> "true"
+    val store = provider match {
+      case "hdfs" => Nil
+      case "rocksdb" => Seq(rocksdb)
+      case _ => Seq(rocksdb, changelog)
+    }
+    val spark = Harness.session(
+      Seq("spark.sql.shuffle.partitions" -> parts.toString) ++ store: _*)
     val root = Files.createTempDirectory("graft_streamlat").toString
     // the checkpoint scratch holds the run's full RocksDB state uploads
     // (4-10 GiB per wall-shaped run): left behind, a campaign of them
@@ -235,17 +221,8 @@ object StreamLatency {
       s""""heap_bytes":${Runtime.getRuntime.maxMemory},""" +
       s""""results":[${results.mkString(",")}]}"""
     println(line)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAM_LAT_OUT",
-      "bench/STREAM_LATENCY.json")
-    if (outPath.nonEmpty) {
-      try {
-        Files.write(Paths.get(outPath), (line + "\n").getBytes("UTF-8"))
-        System.err.println(s"[streamlat] written to $outPath")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[streamlat] could not write $outPath: $e")
-      }
-    }
+    Harness.writeArtifact(sys.env.getOrElse("SPARK_GRAFT_STREAM_LAT_OUT",
+      "bench/STREAM_LATENCY.json"), line)
     spark.stop()
   }
 

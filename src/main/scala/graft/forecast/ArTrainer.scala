@@ -79,18 +79,6 @@ object ArTrainer {
     solve(ata, atb).map(x => (x(0), x.drop(1)))
   }
 
-  /** Multi-step recursive forecast from the last p observations. */
-  def forecastAr(c: Double, phi: Array[Double], history: Array[Double],
-                 steps: Int): Array[Double] = {
-    val buf = history.takeRight(phi.length).reverse.toBuffer // newest first
-    Array.fill(steps) {
-      val next = c + phi.iterator.zipWithIndex
-        .map { case (w, j) => w * buf(j) }.sum
-      buf.prepend(next)
-      next
-    }
-  }
-
   /** In-sample residuals of an AR(m) fit, index-aligned with `series`
     * (first m entries 0 — no prediction exists there).
     */

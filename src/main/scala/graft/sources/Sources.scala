@@ -19,11 +19,6 @@ object Sources {
                 path: String): DataFrame =
     spark.read.schema(schema).option("multiLine", true).json(path)
 
-  /** JSON-lines variant for streaming-shaped fixtures. */
-  def jsonLines(spark: SparkSession, schema: StructType,
-                path: String): DataFrame =
-    spark.read.schema(schema).json(path)
-
   /** S4 hardening: quarantining JSON-lines read. The reference validates
     * every blob before load — gzip magic-byte sniff plus a parse check —
     * and skips bad blobs with a log line

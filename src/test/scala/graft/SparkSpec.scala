@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — mirrors the Verify/Bench session
-  * config (UTC, non-ANSI null-on-failure semantics, small shuffle count).
+/** Shared local session for specs — the [[Harness]] session's semantics
+  * (UTC, non-ANSI null-on-failure, small shuffle count) on a fixed
+  * `local[4]`, since specs must not read the environment.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {

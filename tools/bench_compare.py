@@ -8,6 +8,9 @@ combined first (the min-combine >= 2 fresh runs protocol), e.g.
   bench_compare.py old=o1.json+o2.json new=n1.json+n2.json
 Prints a per-entry table (seconds, ratio last/first label) sorted by ratio,
 plus totals, and a summary of entries whose ratio exceeds +/-15%.
+When both compared labels carry per-sample scheduler counters (the `profile`
+block Bench writes), it also prints per-entry jobs and task CPU ms (min over
+samples) with their ratios: units that host load does not move.
 """
 import json
 import sys
@@ -27,16 +30,37 @@ def combined(paths):
     for n in sorted(names):
         vals = [r["queries"][n] for r in runs if n in r["queries"]]
         out[n] = min(vals)
-    return out
+    return out, counters(runs)
+
+
+def counters(runs):
+    """Per-entry (min jobs, min cpu_ms) over every profile sample, or None
+    when a run has no scheduler counters (artifacts older than them)."""
+    samples = {}
+    for r in runs:
+        prof = r.get("profile")
+        if not prof:
+            return None
+        for n, ps in prof.items():
+            if any("jobs" not in p for p in ps):
+                return None
+            samples.setdefault(n, []).extend(ps)
+    return {n: (min(p["jobs"] for p in ps), min(p["cpu_ms"] for p in ps))
+            for n, ps in samples.items() if ps}
+
+
+def fmt_ratio(b, l):
+    return f"{l / b:5.2f}" if b else "  n/a"
 
 
 def main():
     labels = []
     data = {}
+    prof = {}
     for arg in sys.argv[1:]:
         label, paths = arg.split("=", 1)
         labels.append(label)
-        data[label] = combined(paths)
+        data[label], prof[label] = combined(paths)
     base, last = labels[0], labels[-1]
     names = sorted(set(data[base]) | set(data[last]))
     rows = []
@@ -73,6 +97,14 @@ def main():
     print(f">15% faster under {last}: {len(better)}")
     for n, r in better[:20]:
         print(f"  {n}  {r:.2f}x")
+    if prof[base] is not None and prof[last] is not None:
+        both = sorted(set(prof[base]) & set(prof[last]))
+        print(f"\n{'entry':{w}}  {'jobs':>11}  ratio  {'cpu_ms':>15}  ratio"
+              f"  ({base} -> {last}, min over samples)")
+        for n in both:
+            (jb, cb), (jl, cl) = prof[base][n], prof[last][n]
+            print(f"{n:{w}}  {jb:5d}{jl:6d}  {fmt_ratio(jb, jl)}  "
+                  f"{cb:7d}{cl:8d}  {fmt_ratio(cb, cl)}")
 
 
 if __name__ == "__main__":
