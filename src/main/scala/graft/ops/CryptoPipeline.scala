@@ -12,14 +12,6 @@ import org.apache.spark.sql.types._
   */
 object CryptoPipeline {
 
-  /** P1: parse tweet JSON payloads, drop records with null crypto_key
-    * (stream_join.py:206-214), keyed output. */
-  def parseTweets(raw: DataFrame, payloadCol: String = "value"): DataFrame =
-    raw.select(from_json(col(payloadCol), graft.schemas.Schemas.tweetSchema)
-        .as("t"))
-      .select(col("t.*"))
-      .filter(col("crypto_key").isNotNull)
-
   /** E1/E2: wide price record -> long (symbol, price, timestamp) ticks,
     * null prices dropped (batch_to_mongo.py:169-198; stream_join.py:217-228).
     */

@@ -12,11 +12,19 @@ import graft.schemas.Schemas
   * semantics -> parquet sink.
   *
   * Both sources normalize into one envelope stream (kind, event_time,
-  * symbol, text, price) before a single watermark; each micro-batch then
-  * aggregates the two legs and full-outer joins them
-  * (batch_to_mongo.py:201-238 semantics — see SURVEY.md §7 risk 1 for why
-  * this beats a stream-stream outer join here). The parquet append per
-  * batch id is the idempotent at-least-once sink (T8).
+  * symbol, text, price) before a single watermark. The envelope is a
+  * tagged union with `kind` as the tag, so each micro-batch cogroups it
+  * with one aggregate over (window, symbol) whose aggregates are
+  * conditioned on the tag ([[batchMetrics]]) — Beam's own expansion of
+  * `CoGroupByKey` into one `GroupByKey` over the tagged union
+  * (stream_join.py:479-524), with the full-outer semantics of
+  * batch_to_mongo.py:201-238 (see SURVEY.md §7 risk 1 for why this beats a
+  * stream-stream outer join here). Each micro-batch runs one execution:
+  * the aggregate's map stage and the parquet append. The append per batch
+  * id is the idempotent at-least-once sink (T8); it is unconditional, so a
+  * batch whose rows all drop before the window (every tweet with a null
+  * `crypto_key`, say) may leave one schema-only part file — an emptiness
+  * guard would cost a second full execution of every batch.
   *
   * Scope note: metrics are computed over each micro-batch's arrivals —
   * exactly the reference's cron-batch discipline (every run windows the
@@ -43,6 +51,33 @@ object CryptoStreamJob {
     t.unionByName(p)
   }
 
+  /** The windowed metrics of one batch of [[envelope]] rows: the columns
+    * of `CryptoPipeline.windowedCryptoMetrics` over the same tweets and
+    * price ticks, in the same order, from one aggregate instead of two
+    * aggregates and a full-outer join. Every row is a tweet or a price, so
+    * a (window, symbol) group exists exactly when either leg has a row;
+    * `tweet_texts` is null where the window has no tweet, as the join
+    * leaves it.
+    */
+  def batchMetrics(batch: DataFrame, dur: String): DataFrame = {
+    val tweet = col("kind") === "tweet"
+    val price = col("kind") === "price"
+    batch
+      .filter(col("event_time").isNotNull && col("symbol").isNotNull)
+      .groupBy(window(col("event_time"), dur), col("symbol"))
+      .agg(count(when(tweet, 1)).as("tweet_volume"),
+        array_sort(collect_list(when(tweet, col("text")))).as("texts"),
+        avg(when(price, col("price"))).as("avg_price"),
+        max_by(col("price"), when(price, col("event_time")))
+          .as("last_price"))
+      .select(
+        col("window.start").as("window_start"),
+        col("window.end").as("event_timestamp"),
+        col("symbol"), col("tweet_volume"), col("avg_price"),
+        col("last_price"),
+        when(col("tweet_volume") > 0, col("texts")).as("tweet_texts"))
+  }
+
   /** Start the job over file-source directories; returns the running query.
     */
   def start(spark: SparkSession, tweetsDir: String, pricesDir: String,
@@ -63,18 +98,7 @@ object CryptoStreamJob {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val tweetsLeg = batch.filter(col("kind") === "tweet")
-          .select(col("event_time").as("created_at_iso"),
-            lit(null).cast("string").as("created_at_raw"),
-            lit(null).cast("long").as("timestamp_ms"),
-            col("symbol").as("crypto_key"), col("text"))
-        val pricesLeg = batch.filter(col("kind") === "price")
-          .select(col("symbol"), col("price"),
-            unix_millis(col("event_time")).as("timestamp"))
-        val metrics = CryptoPipeline.windowedCryptoMetrics(
-          tweetsLeg, pricesLeg, dur)
-        if (!metrics.isEmpty)
-          metrics.write.mode("append").parquet(outDir)
+        batchMetrics(batch, dur).write.mode("append").parquet(outDir)
       }
       .start()
   }
