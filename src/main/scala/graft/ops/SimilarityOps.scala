@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StructField, StructType}
+import graft.functions.VectorFunctions.quantize_vec
 
 /** Similarity search over embedding columns (north-star ops).
   *
@@ -34,6 +37,13 @@ object SimilarityOps {
   private def sqDistQ(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.sq_dist_long(a, b)
 
+  /** Literal-size bound for [[argminAssign]]'s batched branch, in matrix
+    * ELEMENTS (longs): ~32 MB of centroid data riding the task binary.
+    * Test-injectable so the fallback branch's parity is spec-pinned on
+    * small data (ArgMinAssignSpec) — production code never mutates it.
+    */
+  private[graft] var argminLiteralMaxElems: Long = 4L * 1000 * 1000
+
   /** Nearest-centroid assignment over a `_qv` column — the one argmin
     * rule every quantized k-means/IVF leg shares, in its BATCHED form:
     * for a plan-embeddable centroid set the whole argmin is ONE
@@ -48,13 +58,6 @@ object SimilarityOps {
     * bit-identical. Appends `cellName` (the winning cid); all other
     * columns pass through.
     */
-  /** Literal-size bound for [[argminAssign]]'s batched branch, in matrix
-    * ELEMENTS (longs): ~32 MB of centroid data riding the task binary.
-    * Test-injectable so the fallback branch's parity is spec-pinned on
-    * small data (ArgMinAssignSpec) — production code never mutates it.
-    */
-  private[graft] var argminLiteralMaxElems: Long = 4L * 1000 * 1000
-
   private def argminAssign(df: DataFrame, id: String,
                            cells: Seq[(Int, Seq[Long])],
                            cellName: String): DataFrame = {
@@ -245,100 +248,157 @@ object SimilarityOps {
     * partition layout or engine: the DuckDB oracle replays the full
     * trajectory with unrolled CTEs and hash-matches. Deterministic init:
     * the k lowest-id vectors. Empty clusters keep their previous
-    * centroid. Output long-form: (cid, dim, n_vecs, centroid) from the
-    * final assignment.
+    * centroid through the intermediate updates and are absent from the
+    * output. Output long-form: (cid, dim, n_vecs, centroid) from the
+    * final update ([[fusedCellPqTrain]]'s cells side).
     */
   def kmeansCentroids(vecs: DataFrame, k: Int, iters: Int,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    require(k > 0 && iters > 0, s"k=$k iters=$iters")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val qvec = graft.functions.VectorFunctions.quantize_vec(col(vecCol))
-    val base = Rebalance(vecs)
-      .select(col(idCol).as("_vid"), qvec.as("_qv")).cache()
-
-    var cents: Seq[(Int, Seq[Long])] = base.orderBy(col("_vid")).limit(k)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Long](1)) }.toSeq
-
-    def assigned(c: Seq[(Int, Seq[Long])]) =
-      argminAssign(base, "_vid", c, "_cid")
-        .select(col("_cid"), col("_qv"))
-    def update(c: Seq[(Int, Seq[Long])]) =
-      assigned(c)
-        .select(col("_cid"), posexplode(col("_qv")).as(Seq("_dim", "_q")))
-        .groupBy(col("_cid"), col("_dim"))
-        .agg(count(lit(1)).as("_n"), sum(col("_q")).as("_s"))
-        .withColumn("_qc",
-          round(col("_s").cast("double") / col("_n")).cast("long"))
-
-    (1 until iters).foreach { _ =>
-      val m = update(cents).select("_cid", "_dim", "_qc").collect()
-        .groupBy(_.getInt(0)).map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
-        }
-      cents = cents.map { case (cid, old) => (cid, m.getOrElse(cid, old)) }
+    val t = withQuantizedCorpus(vecs, idCol, vecCol)(
+      fusedCellPqTrain(_, cells = Some(Lloyd(k, iters))))
+    val rows = t.cells.flatMap { case (cid, qc) =>
+      qc.zipWithIndex.map { case (q, d) =>
+        Row(cid, d, t.cellSizes(cid), q / 1e6)
+      }
     }
-    // materialize the k x dim result eagerly so the corpus cache can be
-    // released before returning (a lazy return would pin it forever)
-    val result = update(cents).select(col("_cid").as("cid"),
-        col("_dim").as("dim"), col("_n").as("n_vecs"),
-        (col("_qc").cast("double") / 1e6).as("centroid"))
-      .localCheckpoint(eager = true)
-    base.unpersist()
-    result
+    vecs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), kmeansSchema)
   }
 
+  /** [[kmeansCentroids]]' output schema: cid and centroid stay nullable,
+    * as the distributed argmin and mean update type them. */
+  private val kmeansSchema = StructType(Seq(
+    StructField("cid", IntegerType),
+    StructField("dim", IntegerType, nullable = false),
+    StructField("n_vecs", LongType, nullable = false),
+    StructField("centroid", DoubleType)))
+
   /** Centroid arrays (cid -> 1e-6-quantized vector) after `iters` exact
-    * Lloyd updates — the driver-side form the IVF searchers consume.
-    * Identical trajectory to [[kmeansCentroids]] (same lowest-id init,
-    * same integer argmin and rounding); clusters left empty by the FINAL
-    * update are dropped, exactly as they are absent from the long-form
-    * output. Skips kmeansCentroids' materialize-then-collect-then-requantize
-    * round-trip — one fewer Spark job per index build.
+    * Lloyd updates — the driver-side form the IVF searchers consume, on
+    * [[kmeansCentroids]]' trajectory (clusters left empty by the final
+    * update are dropped, as they are absent from the long-form output).
     */
   private[graft] def kmeansCentroidArrays(vecs: DataFrame, k: Int,
       iters: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Seq[(Int, Seq[Long])] = {
-    val qvec = graft.functions.VectorFunctions.quantize_vec(col(vecCol))
-    val base = Rebalance(vecs)
-      .select(col(idCol).as("_vid"), qvec.as("_qv")).cache()
-    try kmeansArraysQ(base, k, iters)
-    finally base.unpersist()
+      vecCol: String = "embedding"): Seq[(Int, Seq[Long])] =
+    withQuantizedCorpus(vecs, idCol, vecCol)(
+      fusedCellPqTrain(_, cells = Some(Lloyd(k, iters))).cells)
+
+  /** Rows of `df` as (`id`, `_qv`): the id and its 1e-6-quantized vector,
+    * the input of every argmin, trainer and PQ encoder.
+    */
+  private def quantized(df: DataFrame, id: String, idCol: String,
+                        vecCol: String): DataFrame =
+    df.select(col(idCol).as(id), quantize_vec(col(vecCol)).as("_qv"))
+
+  /** Run `body` over the cached quantized corpus (_vid, _qv) that the
+    * trainer, the corpus cell assignment and the PQ encoder all read.
+    * The cache is released when `body` returns, so `body` must
+    * materialize what it returns.
+    */
+  private def withQuantizedCorpus[T](vecs: DataFrame, idCol: String,
+      vecCol: String)(body: DataFrame => T): T = {
+    val qcorpus = quantized(Rebalance(vecs), "_vid", idCol, vecCol).cache()
+    try body(qcorpus) finally qcorpus.unpersist()
   }
 
-  /** Core of [[kmeansCentroidArrays]] over a prepared (and ideally cached)
-    * quantized corpus (_vid, _qv) — callers that already hold one (IVF-PQ
-    * shares it with the PQ trainer/encoder) skip a redundant
-    * scan+quantize+cache cycle.
+  /** One exact Lloyd mean update over assigned rows (`keys`..., `_qv`):
+    * per (keys, dim), the member count and the quantized mean
+    * round(sum/n), as (`keys`..., _dim, _n, _qc). The sum is a long sum,
+    * so the update does not depend on partition layout.
     */
-  private def kmeansArraysQ(base: DataFrame, k: Int,
-      iters: Int): Seq[(Int, Seq[Long])] = {
+  private def meanUpdate(assigned: DataFrame, keys: String*): DataFrame =
+    assigned
+      .select(keys.map(col) :+
+        posexplode(col("_qv")).as(Seq("_dim", "_q")): _*)
+      .groupBy((keys :+ "_dim").map(col): _*)
+      .agg(sum(col("_q")).as("_s"), count(lit(1)).as("_n"))
+      .select(keys.map(col) ++ Seq(col("_dim"), col("_n"),
+        round(col("_s").cast("double") / col("_n")).cast("long")
+          .as("_qc")): _*)
+
+  /** Driver side of a collected [[meanUpdate]] with `nKeys` int keys:
+    * key -> (member count, dim-ordered centroid).
+    */
+  private def meansByKey(rows: Array[Row],
+                         nKeys: Int): Map[Seq[Int], (Long, Seq[Long])] =
+    rows.groupBy(r => (0 until nKeys).map(r.getInt)).map { case (key, rs) =>
+      val byDim = rs.sortBy(_.getInt(nKeys))
+      key -> ((byDim.head.getLong(nKeys + 1),
+        byDim.map(_.getLong(nKeys + 2)).toSeq))
+    }
+
+  /** One side of [[fusedCellPqTrain]]: `k` clusters, `iters` updates. */
+  private[graft] final case class Lloyd(k: Int, iters: Int) {
     require(k > 0 && iters > 0, s"k=$k iters=$iters")
-    val spark = base.sparkSession
-    import spark.implicits._
-    var cents: Seq[(Int, Seq[Long])] = base.orderBy(col("_vid")).limit(k)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Long](1)) }.toSeq
-    def updateMap(c: Seq[(Int, Seq[Long])]): Map[Int, Seq[Long]] = {
-      argminAssign(base, "_vid", c, "_cid")
-        .select(col("_cid"),
-          posexplode(col("_qv")).as(Seq("_dim", "_q")))
-        .groupBy(col("_cid"), col("_dim"))
-        .agg(sum(col("_q")).as("_s"), count(lit(1)).as("_n"))
-        .withColumn("_qc",
-          round(col("_s").cast("double") / col("_n")).cast("long"))
-        .select("_cid", "_dim", "_qc").collect()
-        .groupBy(_.getInt(0)).map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
-        }
+  }
+
+  /** [[fusedCellPqTrain]]'s result: coarse cells (cid -> centroid) with
+    * their final member counts, and PQ sub-codebooks ((sub, cid) ->
+    * centroid). A side that was not trained is empty.
+    */
+  private[graft] final case class Trained(cells: Seq[(Int, Seq[Long])],
+      cellSizes: Map[Int, Long], codebooks: Map[(Int, Int), Seq[Long]])
+
+  /** The one quantized Lloyd trainer — the IVFADC build (Jégou et al.,
+    * TPAMI'11): the coarse k-means over full vectors (`cells`), the m PQ
+    * sub-codebook k-means over `dim / m`-long subvectors (`pq`), or both,
+    * over the cached quantized corpus (_vid, _qv). Each side's init is
+    * its k lowest-id rows (one shared collect), each round assigns with
+    * the exact integer argmin (ties to the lower cid) and updates with
+    * [[meanUpdate]]. While both sides run, a round's two update
+    * aggregates are ONE unioned job; job packing never changes a
+    * trajectory (PqSpec pins it). Empty clusters keep their previous
+    * centroid, except that the cells' FINAL update drops them.
+    */
+  private[graft] def fusedCellPqTrain(qcorpus: DataFrame,
+      cells: Option[Lloyd] = None, pq: Option[Lloyd] = None,
+      dim: Int = 0, m: Int = 1): Trained = {
+    require(cells.nonEmpty || pq.nonEmpty, "no side to train")
+    require(pq.isEmpty || dim % m == 0, s"dim=$dim not divisible by m=$m")
+    val cellIters = cells.fold(0)(_.iters)
+    val pqIters = pq.fold(0)(_.iters)
+    val subLen = dim / m
+    val init = qcorpus.orderBy(col("_vid")).limit((cells ++ pq).map(_.k).max)
+      .collect().map(_.getSeq[Long](1))
+    var cellC: Seq[(Int, Seq[Long])] =
+      init.take(cells.fold(0)(_.k)).toSeq.zipWithIndex.map(_.swap)
+    var sizes = Map.empty[Int, Long]
+    var pqC: Map[(Int, Int), Seq[Long]] =
+      init.take(pq.fold(0)(_.k)).zipWithIndex.flatMap { case (qv, rank) =>
+        (0 until m).map(j =>
+          ((j, rank), qv.slice(j * subLen, (j + 1) * subLen)))
+      }.toMap
+    // both updates emit (_st, _sub, _cid, _dim, _n, _qc); cells ride
+    // _st = 0 with a constant _sub
+    def cellUpdate: DataFrame =
+      meanUpdate(argminAssign(qcorpus, "_vid", cellC, "_cid"), "_cid")
+        .select(lit(0).as("_st"), lit(0).as("_sub"), col("*"))
+    def pqUpdate: DataFrame =
+      meanUpdate(pqAssign(pqSubForm(qcorpus, "_vid", m, subLen), pqC)
+          .select(col("_sub"), col("_m.c").as("_cid"), col("_qs").as("_qv")),
+        "_sub", "_cid")
+        .select(lit(1).as("_st"), col("*"))
+    for (r <- 1 to math.max(cellIters, pqIters)) {
+      val parts = (if (r <= cellIters) Seq(cellUpdate) else Nil) ++
+        (if (r <= pqIters) Seq(pqUpdate) else Nil)
+      val u = meansByKey(parts.reduce(_.unionAll(_)).collect(), 3)
+      if (r <= cellIters) {
+        val uc = u.collect { case (Seq(0, _, cid), nq) => cid -> nq }
+        cellC =
+          if (r < cellIters)
+            cellC.map { case (cid, old) => cid -> uc.get(cid).fold(old)(_._2) }
+          else uc.toSeq.sortBy(_._1).map { case (cid, (_, qc)) => cid -> qc }
+        sizes = uc.map { case (cid, (n, _)) => cid -> n }
+      }
+      if (r <= pqIters) {
+        val up = u.collect { case (Seq(1, sub, cid), (_, qc)) =>
+          (sub, cid) -> qc }
+        pqC = pqC.map { case (key, old) => key -> up.getOrElse(key, old) }
+      }
     }
-    (1 until iters).foreach { _ =>
-      val m = updateMap(cents)
-      cents = cents.map { case (cid, old) => (cid, m.getOrElse(cid, old)) }
-    }
-    updateMap(cents).toSeq.sortBy(_._1)
+    Trained(cellC, sizes, pqC)
   }
 
   /** L2 (unit-norm) embedding normalization, emitted long-form
@@ -372,15 +432,12 @@ object SimilarityOps {
                     nClusters: Int, iters: Int,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents: Seq[(Int, Seq[Long])] =
-      kmeansCentroidArrays(corpus, nClusters, iters, idCol, vecCol)
-    val qvecExpr = graft.functions.VectorFunctions.quantize_vec(col(vecCol))
+    val cents = kmeansCentroidArrays(corpus, nClusters, iters, idCol, vecCol)
     def withCell(df: DataFrame, id: String, p: String) =
       argminAssign(
           df.select(col(idCol).as(id), col(vecCol).as(p + "v"),
-            l2Norm(col(vecCol)).as(p + "n"), qvecExpr.as("_qv")),
+            l2Norm(col(vecCol)).as(p + "n"),
+            quantize_vec(col(vecCol)).as("_qv")),
           id, cents, "bucket")
         .select(col(id), col(p + "v"), col(p + "n"), col("bucket"))
     val q = withCell(queries, "query_id", "q")
@@ -530,16 +587,12 @@ object SimilarityOps {
              m: Int, codebookK: Int, iters: Int,
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame =
-    pqAdc(queries, corpus, k, dim, m, codebookK, iters, idCol, vecCol, None)
+    withQuantizedCorpus(corpus, idCol, vecCol) { qcorpus =>
+      val cents = fusedCellPqTrain(qcorpus,
+        pq = Some(Lloyd(codebookK, iters)), dim = dim, m = m).codebooks
+      pqAdc(queries, qcorpus, cents, k, dim, m, idCol, vecCol, None)
+    }
 
-  /** IVF-PQ: the coarse trained quantizer ([[kmeansCentroids]] cells)
-    * composed with PQ codes — candidates shrink to ~1/nCells of the
-    * corpus AND each candidate costs m code-table lookups instead of a
-    * dim-wide scan. This is the standard billion-scale ANN layout
-    * (FAISS IVFADC): cells prune I/O, codes prune bytes. Cell assignment
-    * and PQ training both use the exact quantized-long argmin, so the
-    * whole index build and search replay in the oracle.
-    */
   /** Two-stage ANN serving — the standard IVF-PQ pattern: [[ivfPqTopK]]'s
     * ADC ranking nominates `rerankR` candidates per query, and ONLY those
     * ids are re-scored with exact cosine against the raw vectors. At
@@ -573,111 +626,30 @@ object SimilarityOps {
         round(col("cos_sim"), 6).as("cos_sim"), col("rnk"))
   }
 
+  /** IVF-PQ: the coarse trained quantizer ([[kmeansCentroids]] cells)
+    * composed with PQ codes — candidates shrink to ~1/nCells of the
+    * corpus AND each candidate costs m code-table lookups instead of a
+    * dim-wide scan. This is the standard billion-scale ANN layout
+    * (FAISS IVFADC): cells prune I/O, codes prune bytes. Cell assignment
+    * and PQ training both use the exact quantized-long argmin, so the
+    * whole index build and search replay in the oracle. The two
+    * quantizers are independent (PQ trains on raw subvectors, not
+    * residuals), so they train in one [[fusedCellPqTrain]] run, and ONE
+    * cached quantized corpus feeds training, cell assignment and encoding.
+    */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
                 nCells: Int, cellIters: Int, m: Int, codebookK: Int,
                 pqIters: Int, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // ONE cached quantized corpus feeds the cell trainer, the corpus cell
-    // assignment, the PQ init, and (via pqAdc) PQ training + encoding —
-    // previously each leg re-scanned and re-quantized the raw vectors
-    val qcorpus = Rebalance(corpus)
-      .select(col(idCol).as("_vid"), pqQuant(vecCol).as("_qv")).cache()
-    try {
-      // the coarse-cell and PQ trainers are independent (PQ trains on raw
-      // subvectors, not residuals), so their per-round update aggregates
-      // run as ONE unioned Spark job and their inits share one collect —
-      // half the trainer jobs of running the two Lloyd loops back-to-back
-      val (cellCents, pqCents) = fusedCellPqTrain(
-        qcorpus, nCells, cellIters, dim, m, codebookK, pqIters)
-      def cellOfQ(qdf: DataFrame, id: String): DataFrame =
-        argminAssign(qdf, id, cellCents, "_cell")
-          .select(col(id), col("_cell"))
-      val cCell = cellOfQ(qcorpus, "_vid")
-      val qCell = cellOfQ(queries.select(col(idCol).as("_qid"),
-        pqQuant(vecCol).as("_qv")), "_qid")
-      pqAdc(queries, corpus, k, dim, m, codebookK, pqIters, idCol, vecCol,
-        Some((cCell, qCell)), Some(qcorpus), Some(pqCents))
-    } finally qcorpus.unpersist()
-  }
-
-  /** Fused trainer for [[ivfPqTopK]]: the coarse k-means (nCells over
-    * full vectors) and the m PQ sub-codebook k-means (codebookK over
-    * subvectors) share one init collect (the max(nCells, codebookK)
-    * lowest-id rows) and run each round's two update aggregates as ONE
-    * unioned job over the same cached corpus. Trajectories are
-    * bit-identical to [[kmeansArraysQ]] + [[pqTrainCents]] run separately
-    * (same init, argmin, rounding, empty-cluster rules), so the oracle
-    * replay is unchanged — only the job packing differs.
-    */
-  private def fusedCellPqTrain(qcorpus: DataFrame, nCells: Int,
-      cellIters: Int, dim: Int, m: Int, codebookK: Int, pqIters: Int)
-      : (Seq[(Int, Seq[Long])], Map[(Int, Int), Seq[Long]]) = {
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    require(nCells > 0 && cellIters >= 1 && codebookK > 0 && pqIters >= 1)
-    val spark = qcorpus.sparkSession
-    import spark.implicits._
-    val subLen = dim / m
-    val initRows = qcorpus.orderBy(col("_vid"))
-      .limit(math.max(nCells, codebookK)).collect()
-    var cellC: Seq[(Int, Seq[Long])] = initRows.take(nCells).zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Long](1)) }.toSeq
-    var pqC: Map[(Int, Int), Seq[Long]] =
-      initRows.take(codebookK).zipWithIndex.flatMap { case (r, rank) =>
-        val qv = r.getSeq[Long](1)
-        (0 until m).map(j => ((j, rank), qv.slice(j * subLen, (j + 1) * subLen)))
-      }.toMap
-    val csub = pqSubFormQ(qcorpus, "_vid", m, subLen)
-    // both update branches emit (_st, _sub, _cid, _dim, _qc); cells ride
-    // _st=0 with a constant _sub
-    def cellUpdateDf(c: Seq[(Int, Seq[Long])]): DataFrame = {
-      argminAssign(qcorpus, "_vid", c, "_cid")
-        .select(col("_cid"),
-          posexplode(col("_qv")).as(Seq("_dim", "_q")))
-        .groupBy(col("_cid"), col("_dim"))
-        .agg(sum(col("_q")).as("_s"), count(lit(1)).as("_n"))
-        .select(lit(0).as("_st"), lit(0).as("_sub"), col("_cid"),
-          col("_dim"),
-          round(col("_s").cast("double") / col("_n")).cast("long").as("_qc"))
+                vecCol: String = "embedding"): DataFrame =
+    withQuantizedCorpus(corpus, idCol, vecCol) { qcorpus =>
+      val t = fusedCellPqTrain(qcorpus, Some(Lloyd(nCells, cellIters)),
+        Some(Lloyd(codebookK, pqIters)), dim, m)
+      def cellOf(qdf: DataFrame, id: String): DataFrame =
+        argminAssign(qdf, id, t.cells, "_cell").select(col(id), col("_cell"))
+      pqAdc(queries, qcorpus, t.codebooks, k, dim, m, idCol, vecCol,
+        Some((cellOf(qcorpus, "_vid"),
+          cellOf(quantized(queries, "_qid", idCol, vecCol), "_qid"))))
     }
-    def pqUpdateDf(c: Map[(Int, Int), Seq[Long]]): DataFrame =
-      pqAssign(csub, c)
-        .select(col("_sub"), col("_m.c").as("_cid"),
-          posexplode(col("_qs")).as(Seq("_dim", "_q")))
-        .groupBy(col("_sub"), col("_cid"), col("_dim"))
-        .agg(sum(col("_q")).as("_s"), count(lit(1)).as("_n"))
-        .select(lit(1).as("_st"), col("_sub"), col("_cid"), col("_dim"),
-          round(col("_s").cast("double") / col("_n")).cast("long").as("_qc"))
-    var r = 1
-    val rounds = math.max(cellIters, pqIters)
-    while (r <= rounds) {
-      val parts = (if (r <= cellIters) Seq(cellUpdateDf(cellC)) else Nil) ++
-        (if (r <= pqIters) Seq(pqUpdateDf(pqC)) else Nil)
-      val rows = parts.reduce(_.unionAll(_)).collect()
-      val (cellRows, pqRows) = rows.partition(_.getInt(0) == 0)
-      if (r <= cellIters) {
-        val u = cellRows.groupBy(_.getInt(2)).map { case (cid, rs) =>
-          cid -> rs.sortBy(_.getInt(3)).map(_.getLong(4)).toSeq
-        }
-        // intermediate rounds keep an empty cluster's previous centroid;
-        // the FINAL update drops empties — exactly kmeansArraysQ's rule
-        cellC =
-          if (r < cellIters)
-            cellC.map { case (cid, old) => (cid, u.getOrElse(cid, old)) }
-          else u.toSeq.sortBy(_._1)
-      }
-      if (r <= pqIters) {
-        val u = pqRows.groupBy(rr => (rr.getInt(1), rr.getInt(2)))
-          .map { case (key, rs) =>
-            key -> rs.sortBy(_.getInt(3)).map(_.getLong(4)).toSeq
-          }
-        pqC = pqC.map { case (key, old) => key -> u.getOrElse(key, old) }
-      }
-      r += 1
-    }
-    (cellC, pqC)
-  }
 
   /** [[ivfPqTopK]] with TWO-LEVEL (coarse-then-refine) cell assignment —
     * the last flat-O(n·k) assignment form, given the inverted-multi-index
@@ -699,31 +671,20 @@ object SimilarityOps {
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
     require(k1 > 0 && k2 > 0, s"k1=$k1 k2=$k2")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qcorpus = Rebalance(corpus)
-      .select(col(idCol).as("_vid"), pqQuant(vecCol).as("_qv")).cache()
-    try {
-      val (coarse, pqCents) = fusedCellPqTrain(
-        qcorpus, k1, cellIters, dim, m, codebookK, pqIters)
-      val a1 = assignIvfPqCells(qcorpus, "_vid", coarse)
-        .select(col("_vid"), col("cell").as("_c1"), col("_qv"))
-        // feeds sub-init, the sub update, and the final assignment
+    withQuantizedCorpus(corpus, idCol, vecCol) { qcorpus =>
+      val t = fusedCellPqTrain(qcorpus, Some(Lloyd(k1, cellIters)),
+        Some(Lloyd(codebookK, pqIters)), dim, m)
+      // feeds sub-init, the sub update, and the final assignment
+      val a1 = argminAssign(qcorpus, "_vid", t.cells, "_c1")
         .localCheckpoint(eager = true)
-      val subs = broadcast(trainSubCells(a1, k2)
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
-        .toDF("_c1", "_sub", "_sqc"))
-      val cCell = subArgmin(a1, "_vid", subs, k2)
-        .select(col("_vid"), col("cell").as("_cell"))
-      val qa1 = assignIvfPqCells(queries.select(col(idCol).as("_qid"),
-          pqQuant(vecCol).as("_qv")), "_qid", coarse)
-        .select(col("_qid"), col("cell").as("_c1"), col("_qv"))
-      val qCell = subArgmin(qa1, "_qid", subs, k2)
-        .select(col("_qid"), col("cell").as("_cell"))
-      pqAdc(queries, corpus, k, dim, m, codebookK, pqIters, idCol, vecCol,
-        Some((cCell, qCell)), Some(qcorpus), Some(pqCents))
-    } finally qcorpus.unpersist()
+      val subs = subsFrame(qcorpus.sparkSession, trainSubCells(a1, k2))
+      def cellOf(a: DataFrame, id: String): DataFrame =
+        subArgmin(a, id, subs, k2).select(col(id), col("cell").as("_cell"))
+      val qa1 = argminAssign(quantized(queries, "_qid", idCol, vecCol),
+        "_qid", t.cells, "_c1")
+      pqAdc(queries, qcorpus, t.codebooks, k, dim, m, idCol, vecCol,
+        Some((cellOf(a1, "_vid"), cellOf(qa1, "_qid"))))
+    }
   }
 
   /** Materialize the IVF-PQ SERVING index — train once, probe many, the
@@ -745,40 +706,13 @@ object SimilarityOps {
   def writeIvfPqIndex(corpus: DataFrame, path: String, dim: Int,
                       nCells: Int, cellIters: Int, m: Int, codebookK: Int,
                       pqIters: Int, idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qcorpus = Rebalance(corpus)
-      .select(col(idCol).as("_vid"), pqQuant(vecCol).as("_qv")).cache()
-    try {
-      val (cellCents, pqCents) = fusedCellPqTrain(
-        qcorpus, nCells, cellIters, dim, m, codebookK, pqIters)
-      // centroids persist on the same 1e-6 grid they trained on: q/1e6
-      // round-trips exactly through round(x*1e6) (pqEncodeCodes relies
-      // on the same identity)
-      cellCents.flatMap { case (cid, qc) =>
-        qc.zipWithIndex.map { case (q, d) => (cid, d, q / 1e6) }
-      }.toDF("cid", "dim", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/cells")
-      pqCents.toSeq.flatMap { case ((sub, cid), qc) =>
-        qc.zipWithIndex.map { case (q, d) => (sub, cid, d, q / 1e6) }
-      }.toDF("sub", "cid", "dim", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-      val cCell = assignIvfPqCells(qcorpus, "_vid", cellCents)
-        .select(col("_vid"), col("cell"))
-      val codes = pqAssign(pqSubFormQ(qcorpus, "_vid", m, dim / m), pqCents)
-        .groupBy(col("_vid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("_sub"),
-            col("_m.c").as("_cid")))),
-          e => e.getField("_cid")).as("codes"))
-      graft.ops.IndexMaintenance.writeBase(
-        codes.join(cCell, Seq("_vid"))
-          .select(col("_vid").as(idCol), col("codes"), col("cell"))
-          .repartition(col("cell")),
-        s"$path/codes", partitionCol = "cell")
-    } finally qcorpus.unpersist()
-  }
+                      vecCol: String = "embedding"): Unit =
+    withQuantizedCorpus(corpus, idCol, vecCol) { qcorpus =>
+      val t = fusedCellPqTrain(qcorpus, Some(Lloyd(nCells, cellIters)),
+        Some(Lloyd(codebookK, pqIters)), dim, m)
+      writeIvfPqArtifacts(qcorpus, path, t,
+        argminAssign(qcorpus, "_vid", t.cells, "cell"), dim, m, idCol)
+    }
 
   /** [[writeIvfPqIndex]] with a TWO-LEVEL coarse quantizer — the scale
     * lever when coarse-cell count must track corpus size: bounding cell
@@ -802,96 +736,100 @@ object SimilarityOps {
                               idCol: String = "vec_id",
                               vecCol: String = "embedding"): Unit = {
     require(k1 > 0 && k2 > 0, s"k1=$k1 k2=$k2")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qcorpus = Rebalance(corpus)
-      .select(col(idCol).as("_vid"), pqQuant(vecCol).as("_qv")).cache()
-    try {
-      val (coarse, pqCents) = fusedCellPqTrain(
-        qcorpus, k1, cellIters, dim, m, codebookK, pqIters)
-      val a1 = assignIvfPqCells(qcorpus, "_vid", coarse)
-        .select(col("_vid"), col("cell").as("_c1"), col("_qv"))
-        // feeds sub-init, the sub update, and the final assignment
+    withQuantizedCorpus(corpus, idCol, vecCol) { qcorpus =>
+      val spark = qcorpus.sparkSession
+      import spark.implicits._
+      val t = fusedCellPqTrain(qcorpus, Some(Lloyd(k1, cellIters)),
+        Some(Lloyd(codebookK, pqIters)), dim, m)
+      // feeds sub-init, the sub update, and the final assignment
+      val a1 = argminAssign(qcorpus, "_vid", t.cells, "_c1")
         .localCheckpoint(eager = true)
-      val subs: Seq[(Int, Int, Seq[Long])] = trainSubCells(a1, k2)
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
-      coarse.flatMap { case (cid, qc) =>
-        qc.zipWithIndex.map { case (q, d) => (cid, d, q / 1e6) }
-      }.toDF("cid", "dim", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/cells")
-      subs.flatMap { case (c1, sub, qc) =>
-        qc.zipWithIndex.map { case (q, d) => (c1, sub, d, q / 1e6) }
-      }.toDF("c1", "sub", "dim", "centroid")
+      val subs = trainSubCells(a1, k2)
+      longFormDF(spark, subs, "c1", "sub")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/subcells")
       Seq(Tuple1(k2)).toDF("k2")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-      pqCents.toSeq.flatMap { case ((sub, cid), qc) =>
-        qc.zipWithIndex.map { case (q, d) => (sub, cid, d, q / 1e6) }
-      }.toDF("sub", "cid", "dim", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-      val cCell = subArgmin(a1, "_vid",
-          broadcast(subs.toDF("_c1", "_sub", "_sqc")), k2)
-        .select(col("_vid"), col("cell"))
-      val codes = pqAssign(pqSubFormQ(qcorpus, "_vid", m, dim / m), pqCents)
-        .groupBy(col("_vid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("_sub"),
-            col("_m.c").as("_cid")))),
-          e => e.getField("_cid")).as("codes"))
-      graft.ops.IndexMaintenance.writeBase(
-        codes.join(cCell, Seq("_vid"))
-          .select(col("_vid").as(idCol), col("codes"), col("cell"))
-          .repartition(col("cell")),
-        s"$path/codes", partitionCol = "cell")
-    } finally qcorpus.unpersist()
+      writeIvfPqArtifacts(qcorpus, path, t,
+        subArgmin(a1, "_vid", subsFrame(spark, subs), k2), dim, m, idCol)
+    }
+  }
+
+  /** The artifacts both IVF-PQ index forms write: `cells/` (the coarse
+    * centroids), `codebooks/`, and `codes/` — the cached quantized
+    * corpus's PQ codes, partitioned by each row's final `cell` (`cCell`:
+    * _vid, cell, ...). Centroids persist on the same 1e-6 grid they
+    * trained on: q/1e6 round-trips exactly through round(x*1e6)
+    * ([[pqEncodeCodes]] relies on the same identity).
+    */
+  private def writeIvfPqArtifacts(qcorpus: DataFrame, path: String,
+                                  t: Trained, cCell: DataFrame, dim: Int,
+                                  m: Int, idCol: String): Unit = {
+    val spark = qcorpus.sparkSession
+    import spark.implicits._
+    t.cells.flatMap { case (cid, qc) =>
+      qc.zipWithIndex.map { case (q, d) => (cid, d, q / 1e6) }
+    }.toDF("cid", "dim", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/cells")
+    longFormDF(spark, t.codebooks, "sub", "cid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    val codes = pqAssign(pqSubForm(qcorpus, "_vid", m, dim / m), t.codebooks)
+      .groupBy(col("_vid"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("_sub"),
+          col("_m.c").as("_cid")))),
+        e => e.getField("_cid")).as("codes"))
+    graft.ops.IndexMaintenance.writeBase(
+      codes.join(cCell.select(col("_vid"), col("cell")), Seq("_vid"))
+        .select(col("_vid").as(idCol), col("codes"), col("cell"))
+        .repartition(col("cell")),
+      s"$path/codes", partitionCol = "cell")
   }
 
   /** Sub-centroids after one exact Lloyd update over a coarse-assigned
-    * quantized frame `a1` (_vid, _c1, _qv): init is each coarse cell's
-    * k2 lowest-id members, update is the quantized integer mean —
-    * the [[semanticDedupTwoLevel]] trajectory, shared here with the
-    * serving-index build. Returns (_c1, _sub, _sqc) rows; coarse cells
-    * with fewer than k2 members train fewer subs, and subs left empty
-    * by the update vanish (exactly as the SemDeDup form).
+    * quantized frame `a1` (_vid, _c1, _qv, ...): init is each coarse
+    * cell's k2 lowest-id members, the update is [[meanUpdate]] over a
+    * [[subArgmin]] assignment — the two-level trajectory every two-level
+    * op shares. Returns (c1, sub) -> centroid; coarse cells with fewer
+    * than k2 members train fewer subs, and subs left empty by the update
+    * vanish.
     */
-  private def trainSubCells(a1: DataFrame, k2: Int): DataFrame = {
+  private def trainSubCells(a1: DataFrame,
+                            k2: Int): Map[(Int, Int), Seq[Long]] = {
+    val a = a1.select(col("_vid"), col("_c1"), col("_qv"))
     val wCell = Window.partitionBy(col("_c1")).orderBy(col("_vid"))
-    val s0 = broadcast(a1
-      .withColumn("_rk", row_number().over(wCell))
+    val s0 = a.withColumn("_rk", row_number().over(wCell))
       .filter(col("_rk") <= k2)
-      .select(col("_c1"), (col("_rk") - 1).as("_sub"),
-        col("_qv").as("_sqc")))
-    a1.join(s0, Seq("_c1"))
-      .groupBy(col("_vid"))
-      .agg(min(struct(sqDistQ(col("_qv"), col("_sqc")).as("d"),
-          col("_sub").as("s"))).as("_m"),
-        first(col("_c1")).as("_c1"), first(col("_qv")).as("_qv"))
-      .select(col("_c1"), col("_m.s").as("_sub"),
-        posexplode(col("_qv")).as(Seq("_dim", "_q")))
-      .groupBy(col("_c1"), col("_sub"), col("_dim"))
-      .agg(sum(col("_q")).as("_s"), count(lit(1)).as("_cnt"))
-      .withColumn("_qm",
-        round(col("_s").cast("double") / col("_cnt")).cast("long"))
-      .groupBy(col("_c1"), col("_sub"))
-      .agg(transform(array_sort(collect_list(struct(col("_dim"),
-        col("_qm")))), e => e.getField("_qm")).as("_sqc"))
+      .select(col("_c1"), (col("_rk") - 1).as("_sub"), col("_qv").as("_sqc"))
+    meansByKey(meanUpdate(subArgmin(a, "_vid", s0, k2), "_c1", "_sub")
+        .collect(), 2)
+      .map { case (key, (_, qc)) => (key(0), key(1)) -> qc }
   }
 
-  /** Refine a coarse-assigned frame (`id`, _c1, _qv) to its combined
+  /** Sub-centroids ((c1, sub) -> centroid) as [[subArgmin]]'s input. */
+  private def subsFrame(spark: org.apache.spark.sql.SparkSession,
+                        subs: Map[(Int, Int), Seq[Long]]): DataFrame = {
+    import spark.implicits._
+    subs.toSeq.map { case ((c1, sub), qc) => (c1, sub, qc) }
+      .toDF("_c1", "_sub", "_sqc")
+  }
+
+  /** Refine coarse-assigned rows (`id`, _c1, _qv, ...) to their combined
     * two-level cell: argmin over the row's own coarse cell's
-    * sub-centroids (broadcast `sdf`: _c1, _sub, _sqc), ties to the
-    * lower sub; cell = _c1·k2 + sub.
+    * sub-centroids (`sdf`: _c1, _sub, _sqc, broadcast), ties to the
+    * lower sub. Appends `_sub` and `cell` = _c1·k2 + sub; the other input
+    * columns pass through (`first` per id).
     */
   private def subArgmin(a1: DataFrame, id: String, sdf: DataFrame,
-                        k2: Int): DataFrame =
-    a1.join(sdf, Seq("_c1"))
+                        k2: Int): DataFrame = {
+    val others = a1.columns.filterNot(_ == id).toSeq
+    a1.join(broadcast(sdf), Seq("_c1"))
       .groupBy(col(id))
       .agg(min(struct(sqDistQ(col("_qv"), col("_sqc")).as("d"),
           col("_sub").as("s"))).as("_m"),
-        first(col("_c1")).as("_c1"), first(col("_qv")).as("_qv"))
-      .select(col(id), (col("_c1") * k2 + col("_m.s")).as("cell"),
-        col("_qv"))
+        others.map(c => first(col(c)).as(c)): _*)
+      .select(col(id) +: others.map(col) :+ col("_m.s").as("_sub") :+
+        (col("_c1") * k2 + col("_m.s")).as("cell"): _*)
+  }
 
   /** Probe a [[writeIvfPqIndexTwoLevel]] index: queries take the same
     * two-stage assignment (coarse argmin over k1 stored centroids, then
@@ -903,37 +841,21 @@ object SimilarityOps {
                              path: String, queries: DataFrame, k: Int,
                              dim: Int, m: Int, idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
     val subPath = new org.apache.hadoop.fs.Path(s"$path/subcells")
     require(subPath.getFileSystem(
         spark.sparkContext.hadoopConfiguration).exists(subPath),
       s"$path has no subcells/ — it is a FLAT IVF-PQ index " +
         "(writeIvfPqIndex); probe it with ivfPqIndexTopK, or rebuild " +
         "with writeIvfPqIndexTwoLevel for the two-level probe")
-    val cells = loadIvfPqCells(spark, path)
-    val subs = spark.read.parquet(s"$path/subcells").collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1)))
-      .map { case ((c1, sub), rs) =>
-        (c1, sub, rs.sortBy(_.getInt(2))
-          .map(r => math.round(r.getDouble(3) * 1e6)).toSeq)
-      }.toSeq
+    val subs = longFormCentroids(spark.read.parquet(s"$path/subcells"))
     val k2 = spark.read.parquet(s"$path/meta")
       .collect().head.getInt(0)
-    val q = queries.select(col(idCol).as("_qid"), pqQuant(vecCol).as("_qv"))
-    val a1 = assignIvfPqCells(q, "_qid", cells)
-      .select(col("_qid"), col("cell").as("_c1"), col("_qv"))
-    val qCell = subArgmin(a1, "_qid",
-      broadcast(subs.toDF("_c1", "_sub", "_sqc")), k2)
-    adcProbeStored(spark, path, qCell, k, dim, m, idCol)
+    val a1 = argminAssign(quantized(queries, "_qid", idCol, vecCol), "_qid",
+      loadIvfPqCells(spark, path), "_c1")
+    adcProbeStored(spark, path,
+      subArgmin(a1, "_qid", subsFrame(spark, subs), k2), k, dim, m, idCol)
   }
 
-  /** Probe a written IVF-PQ index: NO training, no raw-vector scan — the
-    * per-query cost is one broadcast distance table (m×codebookK integer
-    * entries per query) against a cell-pruned scan of the stored codes,
-    * map-side-aggregated ADC exactly as [[ivfPqTopK]]'s in-query form.
-    * `dim`/`m` must match the index write. Output and ranking are
-    * bit-identical to [[ivfPqTopK]] under the same build parameters.
-    */
   /** Stored cell centroids, back on the 1e-6 training grid. */
   private def loadIvfPqCells(spark: org.apache.spark.sql.SparkSession,
                              path: String): Seq[(Int, Seq[Long])] =
@@ -944,23 +866,16 @@ object SimilarityOps {
           .map(r => math.round(r.getDouble(2) * 1e6)).toSeq
       }.toSeq.sortBy(_._1)
 
-  /** Stored PQ sub-codebooks, back on the 1e-6 training grid. */
-  private def loadIvfPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[(Int, Int), Seq[Long]] =
-    spark.read.parquet(s"$path/codebooks").collect()
+  /** Two-key long-form centroids (key1, key2, dim, centroid) — stored
+    * sub-codebooks or sub-cells — back on the 1e-6 training grid.
+    */
+  private def longFormCentroids(df: DataFrame): Map[(Int, Int), Seq[Long]] =
+    df.collect()
       .groupBy(r => (r.getInt(0), r.getInt(1)))
       .map { case (key, rs) =>
         key -> rs.sortBy(_.getInt(2))
           .map(r => math.round(r.getDouble(3) * 1e6)).toSeq
       }
-
-  /** Coarse-cell assignment of quantized rows (`id`, `_qv`) — the one
-    * argmin rule every IVF-PQ leg (build, append, probe) shares.
-    */
-  private def assignIvfPqCells(qrows: DataFrame, id: String,
-      cells: Seq[(Int, Seq[Long])]): DataFrame =
-    argminAssign(qrows, id, cells, "cell")
-      .select(col(id), col("cell"), col("_qv"))
 
   /** Incrementally add vectors to a written IVF-PQ index WITHOUT
     * retraining: new rows encode against the STORED codebooks
@@ -976,12 +891,11 @@ object SimilarityOps {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
     val spark = newVecs.sparkSession
-    val cells = loadIvfPqCells(spark, path)
-    val codebooks = spark.read.parquet(s"$path/codebooks")
-    val q = newVecs.select(col(idCol), pqQuant(vecCol).as("_qv"))
-    val withCell = assignIvfPqCells(q, idCol, cells)
+    val withCell = argminAssign(quantized(newVecs, idCol, idCol, vecCol),
+        idCol, loadIvfPqCells(spark, path), "cell")
       .select(col(idCol), col("cell"))
-    val codes = pqEncodeCodes(newVecs, codebooks, dim, m, idCol, vecCol)
+    val codes = pqEncodeCodes(newVecs,
+      spark.read.parquet(s"$path/codebooks"), dim, m, idCol, vecCol)
     graft.ops.IndexMaintenance.appendDelta(
       codes.join(withCell, Seq(idCol)), s"$path/codes")
   }
@@ -1005,19 +919,25 @@ object SimilarityOps {
     graft.ops.IndexMaintenance.compactBucketedIncremental(spark,
       s"$path/codes", Seq(idCol), partitionCol = "cell")
 
+  /** Probe a written IVF-PQ index: NO training, no raw-vector scan — the
+    * per-query cost is one broadcast distance table (m×codebookK integer
+    * entries per query) against a cell-pruned scan of the stored codes,
+    * map-side-aggregated ADC exactly as [[ivfPqTopK]]'s in-query form.
+    * `dim`/`m` must match the index write. Output and ranking are
+    * bit-identical to [[ivfPqTopK]] under the same build parameters.
+    */
   def ivfPqIndexTopK(spark: org.apache.spark.sql.SparkSession,
                      path: String, queries: DataFrame, k: Int, dim: Int,
                      m: Int, idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val cells = loadIvfPqCells(spark, path)
-    val q = queries.select(col(idCol).as("_qid"), pqQuant(vecCol).as("_qv"))
-    val qCell = assignIvfPqCells(q, "_qid", cells)
+    val qCell = argminAssign(quantized(queries, "_qid", idCol, vecCol),
+      "_qid", loadIvfPqCells(spark, path), "cell")
     adcProbeStored(spark, path, qCell, k, dim, m, idCol)
   }
 
   /** The stored-index ADC probe shared by the flat and two-level index
     * forms: given each query's resolved coarse cell (`qCell`: _qid,
-    * cell, _qv), build the per-query distance table from the stored
+    * cell, _qv, ...), build the per-query distance table from the stored
     * codebooks, scan only the probed cells' codes
     * (partition-pruned through [[graft.ops.IndexMaintenance]]), and
     * rank by aggregated ADC distance.
@@ -1025,10 +945,10 @@ object SimilarityOps {
   private def adcProbeStored(spark: org.apache.spark.sql.SparkSession,
                              path: String, qCell: DataFrame, k: Int,
                              dim: Int, m: Int, idCol: String): DataFrame = {
-    val cents = loadIvfPqCodebooks(spark, path)
+    val cents = longFormCentroids(spark.read.parquet(s"$path/codebooks"))
     val probeCells: Array[Int] = qCell.select(col("cell")).distinct()
       .collect().map(_.getInt(0))
-    val qdist = pqSubFormQ(qCell.select(col("_qid"), col("_qv")),
+    val qdist = pqSubForm(qCell.select(col("_qid"), col("_qv")),
         "_qid", m, dim / m)
       .join(pqCentsDF(spark, cents), Seq("_sub"))
       .select(col("_qid"), col("_sub"), col("_cid"), pqSubDist.as("_d"))
@@ -1053,19 +973,9 @@ object SimilarityOps {
   // --- PQ internals shared by pqTopK / ivfPqTopK / pqCodebooks /
   // pqEncodeCodes -----------------------------------------------------
 
-  /** 1e-6 grid quantization (same as kmeansCentroids). */
-  private def pqQuant(vecCol: String): Column =
-    graft.functions.VectorFunctions.quantize_vec(col(vecCol))
-
-  /** Long-form quantized subvectors: (id, _sub, _qs). */
-  private def pqSubForm(df: DataFrame, id: String, idCol: String,
-                        vecCol: String, m: Int, subLen: Int): DataFrame =
-    pqSubFormQ(df.select(col(idCol).as(id), pqQuant(vecCol).as("_qv")),
-      id, m, subLen)
-
-  /** [[pqSubForm]] over an already-quantized (id, _qv) input. */
-  private def pqSubFormQ(qdf: DataFrame, id: String, m: Int,
-                         subLen: Int): DataFrame = {
+  /** Long-form quantized subvectors of an (id, _qv) input: (id, _sub, _qs). */
+  private def pqSubForm(qdf: DataFrame, id: String, m: Int,
+                        subLen: Int): DataFrame = {
     val slices = array((0 until m).map(j =>
       slice(col("_qv"), j * subLen + 1, subLen)): _*)
     qdf.select(col(id), posexplode(slices).as(Seq("_sub", "_qs")))
@@ -1078,25 +988,33 @@ object SimilarityOps {
       .toDF("_sub", "_cid", "_qc"))
   }
 
+  /** Two-key centroids as long-form (`key1`, `key2`, dim, centroid) rows,
+    * the 1e-6 grid back to doubles — [[pqCodebooks]]' output and the
+    * stored `codebooks/` and `subcells/`; [[longFormCentroids]] reads
+    * them back.
+    */
+  private def longFormDF(spark: org.apache.spark.sql.SparkSession,
+                         c: Map[(Int, Int), Seq[Long]], key1: String,
+                         key2: String): DataFrame = {
+    import spark.implicits._
+    c.toSeq.flatMap { case ((a, b), qc) =>
+      qc.zipWithIndex.map { case (q, d) => (a, b, d, q / 1e6) }
+    }.toDF(key1, key2, "dim", "centroid")
+  }
+
   /** Exact integer squared distance between _qs and _qc. */
   private def pqSubDist: Column = sqDistQ(col("_qs"), col("_qc"))
 
-  /** Nearest sub-codeword per (row, subspace) — the PQ twin of
-    * [[argminAssign]]'s batched form: the m sub-codebooks ride as ONE
-    * nested plan literal indexed by `_sub`, and each row's argmin over
-    * its subspace's codebookK codewords is a single
-    * [[graft.functions.ArgMinSqDist]] call (was: join on _sub fanning
-    * codebookK rows per subvector + min-struct aggregate). Positions
-    * map back to cids through a parallel per-sub cid table, cid-sorted,
-    * so ties and therefore codes are bit-identical to the join form.
-    */
-  /** Per-subspace nearest-codeword assignment over a long-form subvector
+  /** Nearest sub-codeword per (row, subspace) over a long-form subvector
     * frame (`_vid`, `_sub`, `_qs`): appends `_m` = struct(d, c), the
-    * winning codeword's distance and cid for the ROW's own subspace.
-    * Sub-codebooks are m·codebookK·subLen = dim·codebookK elements —
-    * small by construction — so the primary form rides ONE nested plan
-    * literal (all m codebooks; one codegen'd argmin call per row). Past
-    * [[argminLiteralMaxElems]] (same injectable bound as
+    * winning codeword's distance and cid for the ROW's own subspace —
+    * the PQ twin of [[argminAssign]]'s batched form. Sub-codebooks are
+    * m·codebookK·subLen = dim·codebookK elements — small by
+    * construction — so the primary form rides ONE nested plan literal
+    * indexed by `_sub` (all m codebooks; one codegen'd
+    * [[graft.functions.ArgMinSqDist]] call per row), with positions
+    * mapped back to cids through a parallel cid-sorted per-sub table.
+    * Past [[argminLiteralMaxElems]] (same injectable bound as
     * [[argminAssign]], shared so the two kernels age together) it falls
     * back to a broadcast join on `_sub` + min(struct(d, cid)) regroup —
     * same tie rule (lowest cid) and exact integer distances, so
@@ -1151,52 +1069,6 @@ object SimilarityOps {
     }
   }
 
-  /** Lloyd training of all m sub-codebooks in one pass per round.
-    * Deterministic init: subvectors of the codebookK lowest-id corpus
-    * rows (rank by id = cluster id, per subspace); empty clusters keep
-    * their previous centroid. `csub` is the caller's (cached) long-form
-    * subvector table — callers that also encode against it (pqAdc) reuse
-    * ONE cache instead of building and scanning it twice.
-    */
-  private def pqTrainCents(qcorpus: DataFrame, csub: DataFrame, dim: Int,
-                           m: Int, codebookK: Int,
-                           iters: Int): Map[(Int, Int), Seq[Long]] = {
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    require(codebookK > 0 && iters >= 1)
-    val subLen = dim / m
-    // init in ONE job: sub-form the k lowest-id rows directly (limit on
-    // the cached quantized corpus) instead of collecting ids then
-    // filtering the full csub
-    var cents: Map[(Int, Int), Seq[Long]] = {
-      val initRows = pqSubFormQ(
-        qcorpus.orderBy(col("_vid")).limit(codebookK),
-        "_vid", m, subLen).collect()
-      val rank = initRows.map(_.getLong(0)).distinct.sorted
-        .zipWithIndex.toMap
-      initRows.map { r =>
-        ((r.getInt(1), rank(r.getLong(0))), r.getSeq[Long](2))
-      }.toMap
-    }
-    def update(c: Map[(Int, Int), Seq[Long]]): Map[(Int, Int), Seq[Long]] =
-      pqAssign(csub, c)
-        .select(col("_sub"), col("_m.c").as("_cid"),
-          posexplode(col("_qs")).as(Seq("_dim", "_q")))
-        .groupBy(col("_sub"), col("_cid"), col("_dim"))
-        .agg(sum(col("_q")).as("_s"), count(lit(1)).as("_n"))
-        .withColumn("_qc",
-          round(col("_s").cast("double") / col("_n")).cast("long"))
-        .select("_sub", "_cid", "_dim", "_qc").collect()
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (key, rows) =>
-          key -> rows.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq
-        }
-    (1 to iters).foreach { _ =>
-      val u = update(cents)
-      cents = cents.map { case (key, old) => key -> u.getOrElse(key, old) }
-    }
-    cents
-  }
-
   /** Train the m PQ sub-codebooks — the index-BUILD half of the PQ API
     * (pqTopK/ivfPqTopK run it internally; persist this plus
     * [[pqEncodeCodes]] output to materialize a PQ index). Long-form
@@ -1204,20 +1076,12 @@ object SimilarityOps {
     */
   def pqCodebooks(corpus: DataFrame, dim: Int, m: Int, codebookK: Int,
                   iters: Int, idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qcorpus = Rebalance(corpus)
-      .select(col(idCol).as("_vid"), pqQuant(vecCol).as("_qv")).cache()
-    try {
-      val csub = pqSubFormQ(qcorpus, "_vid", m, dim / m)
-      pqTrainCents(qcorpus, csub, dim, m, codebookK, iters)
-        .toSeq
-        .flatMap { case ((s, cid), qc) =>
-          qc.zipWithIndex.map { case (q, d) => (s, cid, d, q / 1e6) }
-        }.toDF("sub", "cid", "dim", "centroid")
-    } finally qcorpus.unpersist()
-  }
+                  vecCol: String = "embedding"): DataFrame =
+    withQuantizedCorpus(corpus, idCol, vecCol) { qcorpus =>
+      longFormDF(corpus.sparkSession, fusedCellPqTrain(qcorpus,
+        pq = Some(Lloyd(codebookK, iters)), dim = dim, m = m).codebooks,
+        "sub", "cid")
+    }
 
   /** Encode rows to their m PQ codes as a NARROW projection — no
     * explode, no shuffle, streaming-safe (each row folds its subvectors
@@ -1230,15 +1094,11 @@ object SimilarityOps {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
     val subLen = dim / m
-    val cents: Map[(Int, Int), Seq[Long]] = codebooks.collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1)))
-      .map { case (key, rows) =>
-        key -> rows.sortBy(_.getInt(2))
-          .map(r => math.round(r.getDouble(3) * 1e6)).toSeq
-      }
+    val cents = longFormCentroids(codebooks)
     val staged = df.select(col(idCol) +: col(vecCol) +:
       (0 until m).map(j =>
-        slice(pqQuant(vecCol), j * subLen + 1, subLen).as(s"_s$j")): _*)
+        slice(quantize_vec(col(vecCol)), j * subLen + 1, subLen)
+          .as(s"_s$j")): _*)
     def code(j: Int): Column = {
       val entries = cents.collect { case ((s, cid), qc) if s == j =>
         (cid, qc) }.toSeq.sortBy(_._1)
@@ -1252,58 +1112,46 @@ object SimilarityOps {
       array((0 until m).map(code): _*).as("codes"))
   }
 
-  /** Shared PQ train/encode/ADC core; `cells` (corpus-cell, query-cell)
-    * restricts candidate pairs to the same coarse cell (IVF-PQ).
+  /** Shared PQ encode/ADC core over the cached quantized corpus
+    * (_vid, _qv) and its trained sub-codebooks `cents`; `cells`
+    * (corpus-cell, query-cell) restricts candidate pairs to the same
+    * coarse cell (IVF-PQ). The ranking is checkpointed eagerly, before
+    * the caller releases the corpus cache.
     */
-  private def pqAdc(queries: DataFrame, corpus: DataFrame, k: Int,
-                    dim: Int, m: Int, codebookK: Int, iters: Int,
-                    idCol: String, vecCol: String,
-                    cells: Option[(DataFrame, DataFrame)],
-                    qcorpusPre: Option[DataFrame] = None,
-                    centsPre: Option[Map[(Int, Int), Seq[Long]]] = None)
-      : DataFrame = {
+  private def pqAdc(queries: DataFrame, qcorpus: DataFrame,
+                    cents: Map[(Int, Int), Seq[Long]], k: Int, dim: Int,
+                    m: Int, idCol: String, vecCol: String,
+                    cells: Option[(DataFrame, DataFrame)]): DataFrame = {
     val subLen = dim / m
-    val spark = corpus.sparkSession
-    // ONE cached quantized corpus serves init, training, and encoding —
-    // callers holding their own (ivfPqTopK) pass it in and keep ownership
-    val qcorpus = qcorpusPre.getOrElse(Rebalance(corpus)
-      .select(col(idCol).as("_vid"), pqQuant(vecCol).as("_qv")).cache())
-    try {
-      val csub = pqSubFormQ(qcorpus, "_vid", m, subLen)
-      // callers that already trained (ivfPqTopK's fused trainer) pass the
-      // codebooks in; the standalone path trains here
-      val cents = centsPre.getOrElse(
-        pqTrainCents(qcorpus, csub, dim, m, codebookK, iters))
-      // encode the corpus under the trained codebooks; queries get a
-      // per-(query, subspace, cluster) distance table instead
-      val codes0 = pqAssign(csub, cents)
-        .select(col("_vid"), col("_sub"), col("_m.c").as("_cid"))
-      val qdist0 = pqSubForm(queries, "_qid", idCol, vecCol, m, subLen)
-        .join(pqCentsDF(spark, cents), Seq("_sub"))
-        .select(col("_qid"), col("_sub"), col("_cid"), pqSubDist.as("_d"))
-      // IVF restriction: tag codes and distance-table rows with their
-      // coarse cell and make the cell part of the ADC join key
-      val (codes, qdist, joinKeys) = cells match {
-        case Some((cCell, qCell)) =>
-          (codes0.join(cCell, Seq("_vid")),
-            qdist0.join(broadcast(qCell), Seq("_qid")),
-            Seq("_sub", "_cid", "_cell"))
-        case None => (codes0, qdist0, Seq("_sub", "_cid"))
-      }
-      val adc = codes.join(broadcast(qdist), joinKeys)
-        .groupBy(col("_qid"), col("_vid"))
-        .agg(sum(col("_d")).as("_dist"))
-      val w = Window.partitionBy(col("_qid"))
-        .orderBy(col("_dist"), col("_vid"))
-      val ranked = adc.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("_qid").as("query_id"), col("_vid").as("corpus_id"),
-          round(col("_dist").cast("double") / 1e12, 6).as("approx_dist"),
-          col("rnk"))
-      // the eager checkpoint materializes before the corpus cache is
-      // released below (a lazy return would compute cache-less later)
-      ranked.localCheckpoint(eager = true)
-    } finally if (qcorpusPre.isEmpty) qcorpus.unpersist()
+    val spark = qcorpus.sparkSession
+    // encode the corpus under the trained codebooks; queries get a
+    // per-(query, subspace, cluster) distance table instead
+    val codes0 = pqAssign(pqSubForm(qcorpus, "_vid", m, subLen), cents)
+      .select(col("_vid"), col("_sub"), col("_m.c").as("_cid"))
+    val qdist0 = pqSubForm(quantized(queries, "_qid", idCol, vecCol),
+        "_qid", m, subLen)
+      .join(pqCentsDF(spark, cents), Seq("_sub"))
+      .select(col("_qid"), col("_sub"), col("_cid"), pqSubDist.as("_d"))
+    // IVF restriction: tag codes and distance-table rows with their
+    // coarse cell and make the cell part of the ADC join key
+    val (codes, qdist, joinKeys) = cells match {
+      case Some((cCell, qCell)) =>
+        (codes0.join(cCell, Seq("_vid")),
+          qdist0.join(broadcast(qCell), Seq("_qid")),
+          Seq("_sub", "_cid", "_cell"))
+      case None => (codes0, qdist0, Seq("_sub", "_cid"))
+    }
+    val adc = codes.join(broadcast(qdist), joinKeys)
+      .groupBy(col("_qid"), col("_vid"))
+      .agg(sum(col("_d")).as("_dist"))
+    val w = Window.partitionBy(col("_qid"))
+      .orderBy(col("_dist"), col("_vid"))
+    adc.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("_qid").as("query_id"), col("_vid").as("corpus_id"),
+        round(col("_dist").cast("double") / 1e12, 6).as("approx_dist"),
+        col("rnk"))
+      .localCheckpoint(eager = true)
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold — EXACT
@@ -1326,30 +1174,6 @@ object SimilarityOps {
       .select(col("id_a"), col("id_b"), round(col("cos_sim"), 6).as("cos_sim"))
   }
 
-  /** Embedding-cosine near-duplicate pairs via banded sign-LSH — the
-    * scale form (same band shape as [[DedupOps.simhashNearDups]]): the
-    * `bands * bandBits` hyperplane signature is split into `bands` bands;
-    * vectors agreeing on ALL hyperplanes of any band become candidate
-    * pairs, then candidates are verified with the exact cosine and cut at
-    * `threshold`.
-    *
-    * The self-join key is (band, band_val) — small uniform buckets, so
-    * candidate generation is linear-ish in n instead of the exact form's
-    * O(n²) crossJoin; recall is 1 - (1 - p^bandBits)^bands with
-    * p = 1 - θ/π (hyperplane agreement probability), i.e. narrow bands /
-    * many bands trade candidate volume for recall (DedupSimSpec pins the
-    * measured recall against [[cosineNearDupPairs]]). Hyperplanes are the
-    * deterministic [[lshBucket]] mix, so the DuckDB oracle replays the
-    * bucketing exactly.
-    *
-    * Pairs sharing several bands are emitted ONCE by their lowest shared
-    * band ("first-band ownership"): both sides carry the full signature,
-    * and the join filters out collisions whose earlier bands also match —
-    * a few integer compares per candidate row, turning the whole operator
-    * into join → filter → project with NO pair-dedup aggregate (a
-    * groupBy(id_a, id_b) here would build an O(candidate-pairs) hash
-    * table per task — the dominant cost at any scale).
-    */
   /** Standard LSH parameter selection (the S-curve algebra, MMDS ch.3)
     * for [[cosineNearDupPairsBucketed]] under the 30-bit signature
     * budget: hyperplane agreement probability for a pair AT the
@@ -1412,31 +1236,9 @@ object SimilarityOps {
   def cosineNearDupPairsIvf(vecs: DataFrame, threshold: Double,
                             nClusters: Int, iters: Int,
                             idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val cents = kmeansCentroidArrays(vecs, nClusters, iters, idCol, vecCol)
-    val qv = graft.functions.VectorFunctions.quantize_vec(col(vecCol))
-    val assigned = argminAssign(
-        Rebalance(vecs).select(col(idCol), col(vecCol).as("_v"),
-          l2Norm(col(vecCol)).as("_n"), qv.as("_qv")),
-        idCol, cents, "_cell")
-      .select(col(idCol), col("_v"), col("_n"), col("_cell"))
-      // both self-join sides read this frame; without the eager local
-      // checkpoint each side re-runs the argmin assignment over the
-      // whole corpus (Spark shares no common subplans). Blocks are
-      // swept by the harness' persistent-RDD sweep (CheckpointLifecycle).
-      .localCheckpoint(eager = true)
-    assigned.as("a").join(assigned.as("b"),
-        col("a._cell") === col("b._cell") &&
-        col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        (dot(col("a._v"), col("b._v")) /
-          (col("a._n") * col("b._n"))).as("_cos"))
-      .filter(col("_cos") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("_cos"), 6).as("cos_sim"))
-  }
+                            vecCol: String = "embedding"): DataFrame =
+    sameCellPairs(flatCells(vecs, nClusters, iters, idCol, vecCol),
+      threshold)
 
   /** Embedding-space decontamination — the SEMANTIC member of the
     * decontamination family (n-gram exact set membership, Bloom
@@ -1491,37 +1293,9 @@ object SimilarityOps {
                                     k1: Int, k2: Int, iters: Int,
                                     idCol: String = "vec_id",
                                     vecCol: String = "embedding")
-      : DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val coarse = kmeansCentroidArrays(vecs, k1, iters, idCol, vecCol)
-    val qv = graft.functions.VectorFunctions.quantize_vec(col(vecCol))
-    val a1 = argminAssign(
-        Rebalance(vecs).select(col(idCol).as("_vid"),
-          col(vecCol).as("_v"), l2Norm(col(vecCol)).as("_n"),
-          qv.as("_qv")),
-        "_vid", coarse, "_c1")
-      // feeds sub-init, sub update, final argmin, and the payload join
-      .localCheckpoint(eager = true)
-    val subs: Seq[(Int, Int, Seq[Long])] =
-      trainSubCells(a1.select(col("_vid"), col("_c1"), col("_qv")), k2)
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
-    val assigned = subArgmin(a1, "_vid",
-        broadcast(subs.toDF("_c1", "_sub", "_sqc")), k2)
-      .select(col("_vid"), col("cell"))
-      .join(a1.select(col("_vid"), col("_v"), col("_n")), Seq("_vid"))
-      .localCheckpoint(eager = true)
-    assigned.as("a").join(assigned.as("b"),
-        col("a.cell") === col("b.cell") &&
-        col("a._vid") < col("b._vid"))
-      .select(col("a._vid").as("id_a"), col("b._vid").as("id_b"),
-        (dot(col("a._v"), col("b._v")) /
-          (col("a._n") * col("b._n"))).as("_cos"))
-      .filter(col("_cos") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("_cos"), 6).as("cos_sim"))
-  }
+      : DataFrame =
+    sameCellPairs(twoLevelCells(vecs, k1, k2, iters, idCol, vecCol),
+      threshold)
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication by clustering the embedding space with k-means and
@@ -1545,20 +1319,9 @@ object SimilarityOps {
     */
   def semanticDedup(vecs: DataFrame, threshold: Double, nClusters: Int,
                     iters: Int, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val cents = kmeansCentroidArrays(vecs, nClusters, iters, idCol, vecCol)
-    val qv = graft.functions.VectorFunctions.quantize_vec(col(vecCol))
-    val assigned = argminAssign(
-        Rebalance(vecs).select(col(idCol).as("_vid"),
-          col(vecCol).as("_v"), l2Norm(col(vecCol)).as("_n"),
-          qv.as("_qv")),
-        "_vid", cents, "cell")
-      .select(col("_vid"), col("_v"), col("_n"), col("cell"))
-      .localCheckpoint(eager = true)
-    pruneWithinCells(assigned, threshold, idCol)
-  }
+                    vecCol: String = "embedding"): DataFrame =
+    pruneWithinCells(flatCells(vecs, nClusters, iters, idCol, vecCol),
+      threshold, idCol)
 
   /** SemDeDup with TWO-LEVEL (coarse-then-refine) cell assignment — the
     * scale lever past [[semanticDedup]]'s flat argmin: bounding cluster
@@ -1584,51 +1347,66 @@ object SimilarityOps {
                             idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
     require(k1 > 0 && k2 > 0, s"k1=$k1 k2=$k2")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val coarse = kmeansCentroidArrays(vecs, k1, iters, idCol, vecCol)
-    val qv = graft.functions.VectorFunctions.quantize_vec(col(vecCol))
-    val a1 = argminAssign(
-        Rebalance(vecs).select(col(idCol).as("_vid"),
-          col(vecCol).as("_v"), l2Norm(col(vecCol)).as("_n"),
-          qv.as("_qv")),
-        "_vid", coarse, "_c1")
-      .select(col("_vid"), col("_v"), col("_n"), col("_qv"), col("_c1"))
-      // feeds sub-init, sub-assignment, and the final assignment
-      .localCheckpoint(eager = true)
-    // sub-init: the k2 lowest-id members of each coarse cell
-    val wCell = Window.partitionBy(col("_c1")).orderBy(col("_vid"))
-    val s0 = broadcast(a1
-      .withColumn("_rk", row_number().over(wCell))
-      .filter(col("_rk") <= k2)
-      .select(col("_c1"), (col("_rk") - 1).as("_sub"),
-        col("_qv").as("_sqc")))
-    // one exact Lloyd update of the sub-centroids, all cells in one pass
-    def subAssign(cents: DataFrame): DataFrame =
-      a1.join(cents, Seq("_c1"))
-        .groupBy(col("_vid"))
-        .agg(min(struct(sqDistQ(col("_qv"), col("_sqc")).as("d"),
-            col("_sub").as("s"))).as("_m"),
-          first(col("_c1")).as("_c1"), first(col("_v")).as("_v"),
-          first(col("_n")).as("_n"), first(col("_qv")).as("_qv"))
-        .select(col("_vid"), col("_v"), col("_n"), col("_qv"),
-          col("_c1"), col("_m.s").as("_sub"))
-    val s1 = broadcast(subAssign(s0)
-      .select(col("_c1"), col("_sub"),
-        posexplode(col("_qv")).as(Seq("_dim", "_q")))
-      .groupBy(col("_c1"), col("_sub"), col("_dim"))
-      .agg(sum(col("_q")).as("_s"), count(lit(1)).as("_cnt"))
-      .withColumn("_qm",
-        round(col("_s").cast("double") / col("_cnt")).cast("long"))
-      .groupBy(col("_c1"), col("_sub"))
-      .agg(transform(array_sort(collect_list(struct(col("_dim"),
-        col("_qm")))), e => e.getField("_qm")).as("_sqc")))
-    val assigned = subAssign(s1)
-      .select(col("_vid"), col("_v"), col("_n"),
-        (col("_c1") * k2 + col("_sub")).as("cell"))
-      .localCheckpoint(eager = true)
-    pruneWithinCells(assigned, threshold, idCol)
+    pruneWithinCells(twoLevelCells(vecs, k1, k2, iters, idCol, vecCol),
+      threshold, idCol)
   }
+
+  /** Corpus rows (_vid, _v, _n, _qv) — the id, the raw vector, its norm
+    * and its quantized form — with their nearest of `cents` appended as
+    * `cellName` (the exact argmin the cells trained under).
+    */
+  private def payloadCells(vecs: DataFrame, cents: Seq[(Int, Seq[Long])],
+                           cellName: String, idCol: String,
+                           vecCol: String): DataFrame =
+    argminAssign(
+      Rebalance(vecs).select(col(idCol).as("_vid"), col(vecCol).as("_v"),
+        l2Norm(col(vecCol)).as("_n"), quantize_vec(col(vecCol)).as("_qv")),
+      "_vid", cents, cellName)
+
+  /** (_vid, _v, _n, cell) under [[kmeansCentroids]]' k flat cells, the
+    * input of the same-cell tails. Every tail reads it more than once
+    * (both self-join sides; SemDeDup's keep-flag join too) and Spark
+    * shares no common subplans, hence the eager checkpoint; its blocks
+    * are swept by the harness' persistent-RDD sweep.
+    */
+  private def flatCells(vecs: DataFrame, k: Int, iters: Int, idCol: String,
+                        vecCol: String): DataFrame =
+    payloadCells(vecs, kmeansCentroidArrays(vecs, k, iters, idCol, vecCol),
+        "cell", idCol, vecCol)
+      .select(col("_vid"), col("_v"), col("_n"), col("cell"))
+      .localCheckpoint(eager = true)
+
+  /** [[flatCells]] under the two-level assignment: k1 coarse cells, each
+    * refined to at most k2 subs by [[trainSubCells]] + [[subArgmin]];
+    * cell = c1·k2 + sub.
+    */
+  private def twoLevelCells(vecs: DataFrame, k1: Int, k2: Int, iters: Int,
+                            idCol: String, vecCol: String): DataFrame = {
+    // feeds sub-init, the sub update, and the final assignment
+    val a1 = payloadCells(vecs,
+        kmeansCentroidArrays(vecs, k1, iters, idCol, vecCol), "_c1",
+        idCol, vecCol)
+      .localCheckpoint(eager = true)
+    subArgmin(a1, "_vid", subsFrame(vecs.sparkSession, trainSubCells(a1, k2)),
+        k2)
+      .select(col("_vid"), col("_v"), col("_n"), col("cell"))
+      .localCheckpoint(eager = true)
+  }
+
+  /** The cell-restricted near-dup tail shared by [[cosineNearDupPairsIvf]]
+    * and [[cosineNearDupPairsIvfTwoLevel]]: over (_vid, _v, _n, cell),
+    * every same-cell pair id_a < id_b at cosine >= threshold.
+    */
+  private def sameCellPairs(assigned: DataFrame,
+                            threshold: Double): DataFrame =
+    assigned.as("a").join(assigned.as("b"),
+        col("a.cell") === col("b.cell") && col("a._vid") < col("b._vid"))
+      .select(col("a._vid").as("id_a"), col("b._vid").as("id_b"),
+        (dot(col("a._v"), col("b._v")) /
+          (col("a._n") * col("b._n"))).as("_cos"))
+      .filter(col("_cos") >= threshold)
+      .select(col("id_a"), col("id_b"),
+        round(col("_cos"), 6).as("cos_sim"))
 
   /** The SemDeDup within-cell prune shared by [[semanticDedup]] and
     * [[semanticDedupTwoLevel]]: over (_vid, _v, _n, cell), mark every
@@ -1650,6 +1428,30 @@ object SimilarityOps {
         round(col("_maxc"), 6).as("dup_cos"))
   }
 
+  /** Embedding-cosine near-duplicate pairs via banded sign-LSH — the
+    * scale form (same band shape as [[DedupOps.simhashNearDups]]): the
+    * `bands * bandBits` hyperplane signature is split into `bands` bands;
+    * vectors agreeing on ALL hyperplanes of any band become candidate
+    * pairs, then candidates are verified with the exact cosine and cut at
+    * `threshold`.
+    *
+    * The self-join key is (band, band_val) — small uniform buckets, so
+    * candidate generation is linear-ish in n instead of the exact form's
+    * O(n²) crossJoin; recall is 1 - (1 - p^bandBits)^bands with
+    * p = 1 - θ/π (hyperplane agreement probability), i.e. narrow bands /
+    * many bands trade candidate volume for recall (DedupSimSpec pins the
+    * measured recall against [[cosineNearDupPairs]]). Hyperplanes are the
+    * deterministic [[lshBucket]] mix, so the DuckDB oracle replays the
+    * bucketing exactly.
+    *
+    * Pairs sharing several bands are emitted ONCE by their lowest shared
+    * band ("first-band ownership"): both sides carry the full signature,
+    * and the join filters out collisions whose earlier bands also match —
+    * a few integer compares per candidate row, turning the whole operator
+    * into join → filter → project with NO pair-dedup aggregate (a
+    * groupBy(id_a, id_b) here would build an O(candidate-pairs) hash
+    * table per task — the dominant cost at any scale).
+    */
   def cosineNearDupPairsBucketed(vecs: DataFrame, threshold: Double,
                                  dim: Int, bands: Int = 8, bandBits: Int = 2,
                                  idCol: String = "vec_id",
@@ -1773,8 +1575,8 @@ object SimilarityOps {
     * values tagged with its `leg` index and one join + distinct serves
     * all legs (vs one scan+shuffle per config — measured job-count, not
     * data, dominates the per-config spelling at eval sizes).
-    */
-  /** `restrictTo`: optional (anchor_id, nbr_id) frame — candidates are
+    *
+    * `restrictTo`: optional (anchor_id, nbr_id) frame — candidates are
     * semi-joined against it (broadcast) BEFORE the distinct. A recall
     * eval only consults candidates at its ground-truth pairs, so the
     * restriction is semantically free there and turns the distinct's

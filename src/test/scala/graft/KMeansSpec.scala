@@ -58,4 +58,13 @@ class KMeansSpec extends SparkSpec {
     assert(out.toMap.apply(0) === ((2L, 0.0)))
     assert(out.toMap.apply(2) === ((1L, 5.0)))
   }
+
+  test("output schema: long-form names, types and nullability") {
+    val vecs = Seq((1L, Array(0.0f, 1.0f)), (2L, Array(3.0f, 4.0f)))
+      .toDF("vec_id", "embedding")
+    val schema = SimilarityOps.kmeansCentroids(vecs, k = 2, iters = 1)
+      .schema.fields.map(f => (f.name, f.dataType.simpleString, f.nullable))
+    assert(schema.toSeq === Seq(("cid", "int", true), ("dim", "int", false),
+      ("n_vecs", "bigint", false), ("centroid", "double", true)))
+  }
 }

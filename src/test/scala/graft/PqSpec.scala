@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.ops.SimilarityOps
 
 /** Product-quantization ADC semantics. */
@@ -345,5 +346,77 @@ class PqSpec extends SparkSpec {
       finally SimilarityOps.argminLiteralMaxElems = saved
     assert(kernel === joined,
       "pqAssign kernel and broadcast-join branches diverge")
+  }
+
+  test("fused trainer: job packing never changes a trajectory, and each " +
+      "side keeps its own final-round empty-cluster rule") {
+    // 2-D points (x, y) embedded as (x, y, x, y): both PQ subspaces see
+    // the cells' geometry. k = 4 seeds cids 0 and 1 on the same point A,
+    // so ties keep cid 1 empty on both sides in every round; cid 3 (seed
+    // Q) first pulls in R and S, then gives Q back to cid 2 in round 2 —
+    // so the trajectory depends on the round count
+    def p(id: Long, x: Double, y: Double) = (id, vec(x, y, x, y))
+    val qcorpus = Seq(p(1, -20, 0), p(2, -20, 0), p(3, 0, 0), p(4, 0.2, 0),
+        p(5, 10, 10), p(6, 10.2, 10))
+      .toDF("vec_id", "embedding")
+      .select(col("vec_id").as("_vid"), graft.functions.VectorFunctions
+        .quantize_vec(col("embedding")).as("_qv"))
+    import SimilarityOps.{Lloyd, fusedCellPqTrain}
+    val fused = fusedCellPqTrain(qcorpus, Some(Lloyd(4, 2)),
+      Some(Lloyd(4, 3)), dim = 4, m = 2)
+    val cellsOnly = fusedCellPqTrain(qcorpus, cells = Some(Lloyd(4, 2)))
+    val pqOnly = fusedCellPqTrain(qcorpus, pq = Some(Lloyd(4, 3)),
+      dim = 4, m = 2)
+    val a = Seq(-20000000L, 0L)
+    val pq = Seq(100000L, 0L)
+    val rs = Seq(10100000L, 10000000L)
+    // cells: the final update drops the empty cid 1
+    assert(fused.cells ===
+      Seq(0 -> (a ++ a), 2 -> (pq ++ pq), 3 -> (rs ++ rs)))
+    assert(fused.cellSizes === Map(0 -> 2L, 2 -> 2L, 3 -> 2L))
+    // PQ: the empty codeword 1 keeps its previous (init) centroid
+    assert(fused.codebooks === (0 until 2).flatMap(j =>
+      Seq((j, 0) -> a, (j, 1) -> a, (j, 2) -> pq, (j, 3) -> rs)).toMap)
+    assert(cellsOnly.cells === fused.cells)
+    assert(cellsOnly.cellSizes === fused.cellSizes)
+    assert(cellsOnly.codebooks.isEmpty)
+    assert(pqOnly.codebooks === fused.codebooks)
+    assert(pqOnly.cells.isEmpty)
+  }
+
+  test("trainer family job counts stay within the recorded budget") {
+    // drift-free cost line for the shared trainer: jobs per run on a
+    // fixed fixture, result collect included, bounded by the counts the
+    // per-trainer Lloyd loops issued before they were folded into one
+    def vecs(n: Int, seed: Int) = (0 until n).map { i =>
+      (i.toLong + seed * 1000L, (0 until 16).map(d =>
+        (((i * 31 + d * 17 + seed) % 13) - 6).toFloat / 3f))
+    }.toDF("vec_id", "embedding")
+    val corpus = vecs(60, seed = 1)
+    val queries = vecs(4, seed = 2)
+    val runs: Seq[(String, Int, () => Unit)] = Seq(
+      ("kmeansCentroids", 6, () =>
+        SimilarityOps.kmeansCentroids(corpus, k = 4, iters = 2).collect()),
+      ("pqCodebooks", 5, () =>
+        SimilarityOps.pqCodebooks(corpus, dim = 16, m = 4, codebookK = 6,
+          iters = 2).collect()),
+      ("ivfPqTopK", 15, () =>
+        SimilarityOps.ivfPqTopK(queries, corpus, k = 5, dim = 16,
+          nCells = 3, cellIters = 2, m = 4, codebookK = 6,
+          pqIters = 2).collect()),
+      ("semanticDedupTwoLevel", 20, () =>
+        SimilarityOps.semanticDedupTwoLevel(corpus, threshold = 0.9,
+          k1 = 2, k2 = 2, iters = 2).collect()))
+    val counters = new Harness.TaskCounters
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(counters)
+    try runs.foreach { case (name, budget, run) =>
+      counters.reset()
+      run()
+      Bridge.drainListenerBus(spark)
+      val jobs = counters.snapshot.toMap.apply("jobs")
+      info(s"$name jobs=$jobs budget=$budget")
+      assert(jobs <= budget, s"$name ran $jobs jobs, budget $budget")
+    } finally spark.sparkContext.removeSparkListener(counters)
   }
 }

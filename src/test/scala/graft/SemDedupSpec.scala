@@ -61,6 +61,10 @@ class SemDedupSpec extends SparkSpec {
       threshold = 0.95, nClusters = 2, iters = 2)
       .collect().map(_.toString).sorted
     assert(base === repart)
+    def twoLevel(df: org.apache.spark.sql.DataFrame) =
+      SimilarityOps.semanticDedupTwoLevel(df, threshold = 0.95, k1 = 2,
+        k2 = 2, iters = 2).collect().map(_.toString).sorted
+    assert(twoLevel(vecs) === twoLevel(vecs.repartition(7)))
   }
 
   // four well-separated blobs, each with an exact duplicate of its
