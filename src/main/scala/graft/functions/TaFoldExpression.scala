@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   * at scale).
   *
   * Bit-identical by construction to the declarative fold it replaces
-  * (retained as [[graft.ops.TaOps.taFoldDeclarative]]; parity pinned by
-  * TaKernelParitySpec, oracle replay unchanged):
+  * (kept test-side as `ParityTwins.taSnapshotDeclarative`; parity pinned
+  * by TaOpsSpec, oracle replay unchanged):
   *  - same IEEE op ORDER per element: u = greatest(v - prev, 0),
   *    dn = greatest(prev - v, 0), ef' = aF·v + (1-aF)·ef,
   *    es' = aS·v + (1-aS)·es, m = ef' - es', sig' = aG·m + (1-aG)·sig,

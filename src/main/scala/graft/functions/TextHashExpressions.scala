@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[DotProduct]]).
   *
   * Parity contracts (each checked by TextHashExprSpec against the
-  * declarative twin, which remains in DedupOps/TextOps as the oracle-shaped
+  * declarative twin, kept test-side in `ParityTwins` as the oracle-shaped
   * reference implementation):
   *  - word shingles = Spark `split(text, " ")` + windows of n joined by " ",
   *    distinct (set semantics; consumers are order-invariant aggregates)
@@ -100,7 +100,7 @@ object HashKernels {
   /** Sorted distinct word n-gram shingles as an array of UTF8Strings —
     * the kernel twin of the declarative
     * `array_sort(array_distinct(transform(...)))` column
-    * (DedupOps.wordShingles). Sort order is UTF8String's unsigned
+    * (`ParityTwins.wordShingles`). Sort order is UTF8String's unsigned
     * byte order, exactly what `array_sort` uses on strings.
     */
   def wordShinglesSorted(text: UTF8String, n: Int): ArrayData = {
@@ -266,9 +266,10 @@ object HashKernels {
     * per-position word n-gram hash is the first 15 md5-hex chars (= first
     * 60 digest bits); each length-`w` window of consecutive positions
     * selects its minimum by (hash, position) — identical selection and
-    * tie-breaks to [[graft.ops.DedupOps.winnowFingerprintsDeclarative]]'s
-    * window-min over `hex15 ++ zero-padded-pos` strings, which
-    * TextHashExprSpec pins. Output: distinct selected fingerprints as
+    * tie-breaks to the declarative twin's window-min over
+    * `hex15 ++ zero-padded-pos` strings
+    * (`ParityTwins.winnowFingerprintsDeclarative`), which TextHashExprSpec
+    * pins. Output: distinct selected fingerprints as
     * 15-hex-char strings, first-selection order. Window starts are
     * 0..max(nPos-w, 0), so a doc with fewer than w grams still selects
     * from its one truncated window. O(L·w) with w small; the direct scan

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
@@ -27,9 +28,6 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(dt: DataType) = dt match {
@@ -44,46 +42,18 @@ case class DotProduct(left: Expression, right: Expression)
           s"${left.dataType.sql} and ${right.dataType.sql}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    val lf = elemType(left) == FloatType
-    val rf = elemType(right) == FloatType
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i)) {
-        val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-        val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-        s += xv * yv
-      }
-      i += 1
-    }
-    s
-  }
+  private def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dotProduct(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData], isFloat(left), isFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val lGet = if (elemType(left) == FloatType) "getFloat" else "getDouble"
-    val rGet = if (elemType(right) == FloatType) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("sum")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(),
-         |  $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += ((double) $a.$lGet($i)) * ((double) $b.$rGet($i));
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-  }
+      ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.VectorKernels.dotProduct($a, $b, " +
+        s"${isFloat(left)}, ${isFloat(right)});")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(newLeft, newRight)
@@ -122,42 +92,14 @@ case class SqDistLong(left: Expression, right: Expression)
           s"${left.dataType.sql} and ${right.dataType.sql}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i)) {
-        val d = x.getLong(i) - y.getLong(i)
-        s += d * d
-      }
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.sqDistLong(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("sum")
-      val d = ctx.freshName("d")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(),
-         |  $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    final long $d = $a.getLong($i) - $b.getLong($i);
-         |    $s += $d * $d;
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.VectorKernels.sqDistLong($a, $b);")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(newLeft, newRight)
@@ -223,208 +165,183 @@ case class ArgMinSqDist(left: Expression, right: Expression)
     * inapplicable.
     */
   @transient private lazy val foldedMat: Array[Array[Long]] =
-    computeFoldedMat()
-
-  private def computeFoldedMat(): Array[Array[Long]] =
     if (!right.foldable) null
     else right.eval(null) match {
-      case m: ArrayData =>
-        val k = m.numElements()
-        val out = new Array[Array[Long]](k)
-        var j = 0
-        while (j < k) {
-          if (m.isNullAt(j)) return null
-          val cr = m.getArray(j)
-          val n = cr.numElements()
-          val row = new Array[Long](n)
-          var t = 0
-          while (t < n) {
-            if (cr.isNullAt(t)) return null
-            row(t) = cr.getLong(t)
-            t += 1
-          }
-          out(j) = row
-          j += 1
-        }
-        out
+      case m: ArrayData => VectorKernels.hoistMatrix(m)
       case _ => null
     }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
-    val dim = x.numElements()
-    val q = new Array[Long](dim)
-    val qn = new Array[Boolean](dim)
-    var anyNullQ = false
-    var i = 0
-    while (i < dim) {
-      qn(i) = x.isNullAt(i)
-      anyNullQ |= qn(i)
-      q(i) = if (qn(i)) 0L else x.getLong(i)
-      i += 1
-    }
-    var bestD = Long.MaxValue
-    var bestC = -1
-    val fm = foldedMat
-    if (fm != null) {
-      var j = 0
-      while (j < fm.length) {
-        val c = fm(j)
-        val n = math.min(dim, c.length)
-        var s = 0L
-        var t = 0
-        if (!anyNullQ) {
-          while (t < n) {
-            val d = q(t) - c(t)
-            s += d * d
-            t += 1
-          }
-        } else {
-          while (t < n) {
-            if (!qn(t)) {
-              val d = q(t) - c(t)
-              s += d * d
-            }
-            t += 1
-          }
-        }
-        if (s < bestD) { bestD = s; bestC = j }
-        j += 1
-      }
-    } else {
-      val m = b.asInstanceOf[ArrayData]
-      var j = 0
-      val k = m.numElements()
-      while (j < k) {
-        if (!m.isNullAt(j)) {
-          val c = m.getArray(j)
-          val n = math.min(dim, c.numElements())
-          var s = 0L
-          var t = 0
-          while (t < n) {
-            if (!qn(t) && !c.isNullAt(t)) {
-              val d = q(t) - c.getLong(t)
-              s += d * d
-            }
-            t += 1
-          }
-          if (s < bestD) { bestD = s; bestC = j }
-        }
-        j += 1
-      }
-    }
-    if (bestC < 0) null
-    else new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](bestC, bestD))
+    if (foldedMat != null) VectorKernels.argminHoisted(x, foldedMat)
+    else VectorKernels.argmin(x, b.asInstanceOf[ArrayData])
   }
 
+  /** The hoisted matrix rides the generated class as ONE `long[][]`
+    * reference, never re-decoded from the literal per row. */
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val i = ctx.freshName("i"); val j = ctx.freshName("j")
-    val t = ctx.freshName("t"); val n = ctx.freshName("n")
-    val dim = ctx.freshName("dim"); val k = ctx.freshName("k")
-    val q = ctx.freshName("q"); val qn = ctx.freshName("qn")
-    val s = ctx.freshName("s"); val d = ctx.freshName("d")
-    val bd = ctx.freshName("bestD"); val bc = ctx.freshName("bestC")
-    val c = ctx.freshName("cent")
-    if (foldedMat != null) {
-      // foldable-literal fast path: the matrix rides the generated class
-      // as ONE primitive long[][] reference (hoisted at codegen, never
-      // re-decoded from the literal's ArrayData bitmap+offsets per row)
-      // and the no-null-query inner loop is branch-free — the
-      // JIT-friendliest shape available without Panama SIMD. Same
-      // argmin/tie/null algebra as the generic path (spec-pinned
-      // bit-identical, VectorExprSpec).
-      val mref = ctx.addReferenceObj("argminMat", foldedMat, "long[][]")
-      val anq = ctx.freshName("anyNullQ")
-      nullSafeCodeGen(ctx, ev, (a, _) => s"""
-         |final int $dim = $a.numElements();
-         |final long[] $q = new long[$dim];
-         |final boolean[] $qn = new boolean[$dim];
-         |boolean $anq = false;
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  $qn[$i] = $a.isNullAt($i);
-         |  $anq |= $qn[$i];
-         |  $q[$i] = $qn[$i] ? 0L : $a.getLong($i);
-         |}
-         |long $bd = Long.MAX_VALUE;
-         |int $bc = -1;
-         |final int $k = $mref.length;
-         |for (int $j = 0; $j < $k; $j++) {
-         |  final long[] $c = $mref[$j];
-         |  final int $n = java.lang.Math.min($dim, $c.length);
-         |  long $s = 0L;
-         |  if (!$anq) {
-         |    for (int $t = 0; $t < $n; $t++) {
-         |      final long $d = $q[$t] - $c[$t];
-         |      $s += $d * $d;
-         |    }
-         |  } else {
-         |    for (int $t = 0; $t < $n; $t++) {
-         |      if (!$qn[$t]) {
-         |        final long $d = $q[$t] - $c[$t];
-         |        $s += $d * $d;
-         |      }
-         |    }
-         |  }
-         |  if ($s < $bd) { $bd = $s; $bc = $j; }
-         |}
-         |if ($bc < 0) {
-         |  ${ev.isNull} = true;
-         |  ${ev.value} = null;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions
-         |    .GenericInternalRow(new Object[] {
-         |      java.lang.Integer.valueOf($bc),
-         |      java.lang.Long.valueOf($bd) });
-         |}
-       """.stripMargin)
-    } else nullSafeCodeGen(ctx, ev, (a, b) => s"""
-         |final int $dim = $a.numElements();
-         |final long[] $q = new long[$dim];
-         |final boolean[] $qn = new boolean[$dim];
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  $qn[$i] = $a.isNullAt($i);
-         |  $q[$i] = $qn[$i] ? 0L : $a.getLong($i);
-         |}
-         |long $bd = Long.MAX_VALUE;
-         |int $bc = -1;
-         |final int $k = $b.numElements();
-         |for (int $j = 0; $j < $k; $j++) {
-         |  if (!$b.isNullAt($j)) {
-         |    final org.apache.spark.sql.catalyst.util.ArrayData $c =
-         |      $b.getArray($j);
-         |    final int $n = java.lang.Math.min($dim, $c.numElements());
-         |    long $s = 0L;
-         |    for (int $t = 0; $t < $n; $t++) {
-         |      if (!$qn[$t] && !$c.isNullAt($t)) {
-         |        final long $d = $q[$t] - $c.getLong($t);
-         |        $s += $d * $d;
-         |      }
-         |    }
-         |    if ($s < $bd) { $bd = $s; $bc = $j; }
-         |  }
-         |}
-         |if ($bc < 0) {
-         |  ${ev.isNull} = true;
-         |  ${ev.value} = null;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions
-         |    .GenericInternalRow(new Object[] {
-         |      java.lang.Integer.valueOf($bc),
-         |      java.lang.Long.valueOf($bd) });
-         |}
-       """.stripMargin)
+    val call: (String, String) => String =
+      if (foldedMat != null) {
+        val m = ctx.addReferenceObj("argminMat", foldedMat, "long[][]")
+        (a, _) => s"argminHoisted($a, $m)"
+      } else (a, b) => s"argmin($a, $b)"
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.VectorKernels.${call(a, b)};
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(newLeft, newRight)
 }
 
-/** Static kernel for [[QuantizeVec]] — kept out of the expression class so
-  * generated code can call it with one static invoke.
+/** Static kernels for the vector expressions: each loop is written once
+  * here, and both `nullSafeEval` and the generated code call it, so the
+  * interpreted and codegen paths cannot drift apart.
   */
-object VectorKernels {
+private[functions] object VectorKernels {
+  /** [[DotProduct]]: Σ x_i·y_i over the common prefix, each element
+    * upcast to double, accumulated left to right; a null element on
+    * either side contributes 0. */
+  def dotProduct(x: ArrayData, y: ArrayData,
+      xFloat: Boolean, yFloat: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i)) {
+        val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+        val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+        s += xv * yv
+      }
+      i += 1
+    }
+    s
+  }
+
+  /** [[SqDistLong]]: exact Σ(x_i - y_i)² over the common prefix, left to
+    * right; a null element on either side skips that dimension. */
+  def sqDistLong(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i)) {
+        val d = x.getLong(i) - y.getLong(i)
+        s += d * d
+      }
+      i += 1
+    }
+    s
+  }
+
+  /** The centroid matrix as primitive rows, or null when any row or
+    * element is null (such a matrix keeps the generic [[argmin]]). */
+  def hoistMatrix(m: ArrayData): Array[Array[Long]] = {
+    val out = new Array[Array[Long]](m.numElements())
+    var j = 0
+    while (j < out.length) {
+      if (m.isNullAt(j)) return null
+      val cr = m.getArray(j)
+      val row = new Array[Long](cr.numElements())
+      var t = 0
+      while (t < row.length) {
+        if (cr.isNullAt(t)) return null
+        row(t) = cr.getLong(t)
+        t += 1
+      }
+      out(j) = row
+      j += 1
+    }
+    out
+  }
+
+  /** Copies the query vector into `q` once (null elements as 0 and
+    * flagged in `qn`); true when any element is null. */
+  private def loadQuery(x: ArrayData, q: Array[Long],
+                        qn: Array[Boolean]): Boolean = {
+    var anyNull = false
+    var i = 0
+    while (i < q.length) {
+      qn(i) = x.isNullAt(i)
+      anyNull |= qn(i)
+      q(i) = if (qn(i)) 0L else x.getLong(i)
+      i += 1
+    }
+    anyNull
+  }
+
+  private def nearest(c: Int, d: Long): InternalRow =
+    if (c < 0) null else new GenericInternalRow(Array[Any](c, d))
+
+  /** [[ArgMinSqDist]] over a hoisted matrix: the no-null-query inner
+    * loop is branch-free. Same argmin, tie and null rules as [[argmin]]
+    * on a matrix without null rows or elements. */
+  def argminHoisted(x: ArrayData,
+      mat: Array[Array[Long]]): InternalRow = {
+    val q = new Array[Long](x.numElements())
+    val qn = new Array[Boolean](q.length)
+    val anyNullQ = loadQuery(x, q, qn)
+    var bestD = Long.MaxValue
+    var bestC = -1
+    var j = 0
+    while (j < mat.length) {
+      val c = mat(j)
+      val n = math.min(q.length, c.length)
+      var s = 0L
+      var t = 0
+      if (!anyNullQ) {
+        while (t < n) {
+          val d = q(t) - c(t)
+          s += d * d
+          t += 1
+        }
+      } else {
+        while (t < n) {
+          if (!qn(t)) {
+            val d = q(t) - c(t)
+            s += d * d
+          }
+          t += 1
+        }
+      }
+      if (s < bestD) { bestD = s; bestC = j }
+      j += 1
+    }
+    nearest(bestC, bestD)
+  }
+
+  /** [[ArgMinSqDist]] over any matrix: null rows are skipped, a null on
+    * either side of a dimension skips that dimension, ties keep the lower
+    * position, and no candidate row yields null. */
+  def argmin(x: ArrayData, mat: ArrayData): InternalRow = {
+    val q = new Array[Long](x.numElements())
+    val qn = new Array[Boolean](q.length)
+    loadQuery(x, q, qn)
+    var bestD = Long.MaxValue
+    var bestC = -1
+    val k = mat.numElements()
+    var j = 0
+    while (j < k) {
+      if (!mat.isNullAt(j)) {
+        val c = mat.getArray(j)
+        val n = math.min(q.length, c.numElements())
+        var s = 0L
+        var t = 0
+        while (t < n) {
+          if (!qn(t) && !c.isNullAt(t)) {
+            val d = q(t) - c.getLong(t)
+            s += d * d
+          }
+          t += 1
+        }
+        if (s < bestD) { bestD = s; bestC = j }
+      }
+      j += 1
+    }
+    nearest(bestC, bestD)
+  }
+
   /** Element-wise `round(v.cast(double) * 1e6).cast(long)` with Spark's
     * exact Round semantics for doubles: NaN/Infinity pass through the
     * rounding unchanged (then saturating-cast to long like Spark's
@@ -521,9 +438,4 @@ object VectorFunctions {
   def argmin_sq_dist(vec: Column, cents: Column): Column =
     Bridge.column(ArgMinSqDist(Bridge.expression(vec),
       Bridge.expression(cents)))
-
-  /** Register dot_product for SQL use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Bridge.registerFunction(spark, "dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)))
 }

@@ -48,20 +48,12 @@ object DedupOps {
       .withColumn("dup_rate",
         (col("n_docs") - col("n_distinct")).cast("double") / col("n_docs"))
 
-  /** Word n-gram shingles (sorted distinct array). */
-  def wordShingles(textCol: String, n: Int): Column = {
-    val words = split(col(textCol), " ")
-    val idx = sequence(lit(0), greatest(size(words) - n, lit(0)))
-    array_sort(array_distinct(transform(idx, i =>
-      concat_ws(" ", slice(words, i + 1, lit(n))))))
-  }
-
-  /** Kernel twin of [[wordShingles]] (graft.functions.WordShingles): one
-    * whole-stage-codegen call per doc instead of the interpreted
-    * transform+distinct+sort lambda chain — element-for-element identical
-    * output (TextHashExprSpec parity pin). The declarative column above
-    * stays as the oracle-shaped reference and feeds the parity twins
-    * ([[minhashSignaturesDeclarative]], [[simhashDeclarative]]).
+  /** Word n-gram shingles, sorted and distinct
+    * (graft.functions.WordShingles): one whole-stage-codegen call per doc
+    * instead of the interpreted transform+distinct+sort lambda chain —
+    * element-for-element identical output to the declarative column, kept
+    * test-side as `ParityTwins.wordShingles` (TextHashExprSpec parity
+    * pin).
     */
   def wordShinglesKernel(textCol: String, n: Int): Column =
     graft.functions.TextHashFunctions.word_shingles(col(textCol), n)
@@ -70,7 +62,8 @@ object DedupOps {
     * ([[graft.functions.MinHashSigs]]): a per-doc signature is a scalar
     * function of the text, so the scale-right shape is a narrow projection —
     * no shingle explode (O(shingles) rows), no groupBy shuffle. The
-    * declarative twin below is the oracle-shaped reference implementation.
+    * declarative twin (`ParityTwins.minhashSignaturesDeclarative`) is the
+    * oracle-shaped reference implementation.
     * Output: idCol, m0..m{k-1}.
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
@@ -79,22 +72,6 @@ object DedupOps {
       .minhash_sigs(col(textCol), shingleWords, k)
     val cols = col(idCol) +: (0 until k).map(i => sig.getItem(i).as(s"m$i"))
     Rebalance(docs).select(cols: _*)
-  }
-
-  /** Declarative MinHash twin (explode + groupBy-min): keeps every md5
-    * projection and the min aggregate in whole-stage codegen with partial
-    * aggregation, at the cost of materializing the shingle explode and one
-    * shuffle. Retained for parity testing and as the form a SQL-only user
-    * would write.
-    */
-  def minhashSignaturesDeclarative(docs: DataFrame, idCol: String,
-                                   textCol: String, shingleWords: Int,
-                                   k: Int): DataFrame = {
-    val exploded = Rebalance(docs).select(col(idCol),
-      explode(wordShingles(textCol, shingleWords)).as("s"))
-    val mins = (0 until k).map(i =>
-      min(md5(concat(lit(i.toString), lit("|"), col("s")))).as(s"m$i"))
-    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
   }
 
   /** Per-(doc, band) LSH band hashes — the shared banding stage behind
@@ -485,7 +462,7 @@ object DedupOps {
       .select(col(idCol), explode(wordShinglesKernel(textCol, n)).as("g"))
       .select(col(idCol),
         conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long").as("h"))
-    // wordShingles is distinct per doc, so the per-h count == distinct-doc df
+    // shingles are distinct per doc, so the per-h count == distinct-doc df
     val byGram = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     grams.withColumn("df", count(lit(1)).over(byGram))
       .groupBy(col(idCol))
@@ -571,9 +548,9 @@ object DedupOps {
     * text, so the scale-right shape is the one-pass native kernel
     * ([[graft.functions.WinnowFps]], doGenCode): a narrow codegen'd
     * projection + explode, no shuffle, no window pass
-    * ([[winnowFingerprintsDeclarative]] is the SQL-shaped twin; kernel
-    * parity pinned by TextHashExprSpec). Density ~2/(w+1) of positions.
-    * Output: (idCol, fp), distinct per doc.
+    * (`ParityTwins.winnowFingerprintsDeclarative` is the SQL-shaped twin;
+    * kernel parity pinned by TextHashExprSpec). Density ~2/(w+1) of
+    * positions. Output: (idCol, fp), distinct per doc.
     */
   def winnowFingerprints(docs: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text", n: Int = 4,
@@ -581,43 +558,6 @@ object DedupOps {
     Rebalance(docs).select(col(idCol),
       explode(graft.functions.TextHashFunctions
         .winnow_fps(col(textCol), n, w)).as("fp"))
-
-  /** Declarative winnowing twin (posexplode + window-min): the
-    * oracle-shaped reference implementation the native kernel must match
-    * fingerprint-for-fingerprint (TextHashExprSpec parity). Retained as
-    * the form a SQL-only user would write; costs a shuffle + window pass
-    * the kernel doesn't.
-    *
-    * Hard-won structure notes: the gram array expression must be
-    * referenced EXACTLY once (a sibling `size(gramArr)` in the explode's
-    * select re-evaluates the interpreted transform per OUTPUT row — O(L²)
-    * per doc, measured 20×); full-window detection reuses the sliding
-    * frame itself (`count` over the SAME window spec as the min shares
-    * one WindowExec); a lead()-built gram variant measured slower than
-    * the transform lambda.
-    */
-  def winnowFingerprintsDeclarative(
-      docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 4, w: Int = 4): DataFrame = {
-    val words = split(col(textCol), " ")
-    val gramArr = transform(
-      sequence(lit(0), greatest(size(words) - n, lit(0))),
-      i => concat_ws(" ", slice(words, i + 1, lit(n))))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("pos")).rowsBetween(0, w - 1)
-    Rebalance(docs)
-      .select(col(idCol), posexplode(gramArr).as(Seq("pos", "g")))
-      .select(col(idCol), col("pos"),
-        concat(substring(md5(col("g")), 1, 15),
-          lpad(col("pos").cast("string"), 8, "0")).as("key"))
-      .withColumn("sel", min(col("key")).over(win))
-      .withColumn("frame_n", count(lit(1)).over(win))
-      // full windows only; pos 0 also kept so a short doc (fewer than w
-      // grams) still fingerprints from its one truncated window
-      .filter(col("frame_n") === w || col("pos") === 0)
-      .select(col(idCol), substring(col("sel"), 1, 15).as("fp"))
-      .distinct()
-  }
 
   /** Passage-level near-dup pairs from shared winnowing fingerprints:
     * docs sharing ≥ `minShared` selected fingerprints. Fingerprints with
@@ -664,33 +604,6 @@ object DedupOps {
       graft.functions.TextHashFunctions
         .simhash64(col(textCol), shingleWords).as("simhash"))
 
-  /** Declarative SimHash twin (explode + 64 bit-vote sums): pure built-in
-    * algebra, one shuffle. The 64-bit hash is assembled from the md5 hex
-    * in two 32-bit halves (`conv` parses each half exactly; a single
-    * 16-char parse would overflow signed long). Retained for parity
-    * testing — the native kernel must reproduce it bit-for-bit.
-    */
-  def simhashDeclarative(docs: DataFrame, idCol: String = "doc_id",
-              textCol: String = "text", shingleWords: Int = 2): DataFrame = {
-    val hx = md5(col("s"))
-    val hi = conv(substring(hx, 1, 8), 16, 10).cast("long")
-    val lo = conv(substring(hx, 9, 8), 16, 10).cast("long")
-    val exploded = Rebalance(docs)
-      .select(col(idCol),
-        explode(wordShingles(textCol, shingleWords)).as("s"))
-      .withColumn("_h", shiftleft(hi, 32).bitwiseOR(lo))
-    val bitVotes = (0 until 64).map { b =>
-      val bit = shiftrightunsigned(col("_h"), b).bitwiseAND(lit(1L))
-      sum(bit * 2 - 1).as(s"bit_$b")
-    }
-    val votes = exploded.groupBy(col(idCol))
-      .agg(bitVotes.head, bitVotes.tail: _*)
-    val sig = (0 until 64)
-      .map(b => when(col(s"bit_$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    votes.select(col(idCol), sig.as("simhash"))
-  }
-
   /** Decontamination: drop training documents sharing any word n-gram
     * with the evaluation set (the GPT-3-style 13-gram discipline, n
     * configurable). The eval side's distinct gram set is small by
@@ -700,7 +613,7 @@ object DedupOps {
   def decontaminate(train: DataFrame, test: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
                     n: Int = 5): DataFrame = {
-    // wordShingles is already per-doc distinct, so repetitive docs emit
+    // shingles are already per-doc distinct, so repetitive docs emit
     // each gram once into the explode — no extra dedup pass needed here
     val testGrams = test
       .select(explode(wordShinglesKernel(textCol, n)).as("g"))

@@ -9,10 +9,11 @@ import graft.functions.VectorFunctions.quantize_vec
 
 /** Similarity search over embedding columns (north-star ops).
   *
-  * Embeddings are `ARRAY<FLOAT>`; all math is done in double (explicit cast
-  * before the fold) so results are engine-portable and stable. Dot products
-  * use `aggregate(zip_with(...))` — codegen'd higher-order functions, no
-  * UDF, no shuffle for the scalar itself.
+  * Embeddings are `ARRAY<FLOAT>`; all math is done in double (each element
+  * upcast before the multiply) so results are engine-portable and stable.
+  * Dot products use the native [[graft.functions.DotProduct]] kernel — one
+  * whole-stage-codegen call per pair, no UDF, no shuffle for the scalar
+  * itself.
   */
 object SimilarityOps {
 
@@ -40,7 +41,7 @@ object SimilarityOps {
   /** Literal-size bound for [[argminAssign]]'s batched branch, in matrix
     * ELEMENTS (longs): ~32 MB of centroid data riding the task binary.
     * Test-injectable so the fallback branch's parity is spec-pinned on
-    * small data (ArgMinAssignSpec) — production code never mutates it.
+    * small data (SemDedupSpec) — production code never mutates it.
     */
   private[graft] var argminLiteralMaxElems: Long = 4L * 1000 * 1000
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Technical-analysis indicator snapshot — the compute twin of the
@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the recursions are non-associative, so this is the same
   * collect-then-fold fan-in as [[TimeSeriesOps.ewmaLast]] — ONE shuffle to
-  * group each symbol's series, then a single left-to-right
-  * `functions.aggregate` fold whose accumulator carries every recursive
-  * state variable at once (prev price, both MACD EMAs, the signal EMA and
+  * group each symbol's series, then one left-to-right fold in the native
+  * `ta_fold` kernel ([[graft.functions.TaFoldKernel]]) whose state holds
+  * every recursive variable (prev price, both MACD EMAs, the signal EMA,
   * both Wilder averages), so the whole indicator family costs one pass
   * over each series. Per-symbol history must fit an executor (2M points ≈
   * 48 MB — comfortably true for per-symbol tick history). The fold runs
@@ -79,7 +79,7 @@ object TaOps {
     // whole per-byte cost at scale). Op order, three-valued null logic,
     // `greatest` null/NaN rules, the 0.0 fold inits and the VWAP window
     // predicate are replicated exactly — the declarative twin is kept
-    // below ([[taSnapshotDeclarative]]) and TaKernelParitySpec pins
+    // test-side (ParityTwins.taSnapshotDeclarative) and TaOpsSpec pins
     // equality row-for-row; the DuckDB oracle replay is unchanged.
     val fold = graft.functions.TaFoldFunctions.ta_fold(series,
       aF, aS, aG, aW, smaN, vwapHours * 3600000000L)
@@ -96,7 +96,7 @@ object TaOps {
         lit(100.0)))
     val macd = col("_f").getField("ef") - col("_f").getField("es")
     val sig = col("_f").getField("sig")
-    return withF.select(
+    withF.select(
       col(keyCol),
       lastT.as("ts_last"),
       n.cast("long").as("n_points"),
@@ -107,96 +107,5 @@ object TaOps {
       round(macd - sig, 6).as("macd_hist"),
       round(col("_f").getField("sum_pv") /
         nullif(col("_f").getField("sum_w"), lit(0.0)), 6).as("vwap24"))
-  }
-
-  /** The pre-r18 declarative fold — retained verbatim as the
-    * oracle-shaped reference implementation the native kernel must match
-    * row-for-row (TaKernelParitySpec).
-    */
-  private[graft] def taSnapshotDeclarative(df: DataFrame, keyCol: String,
-                 tsCol: String, priceCol: String, volCol: String,
-                 smaN: Int = 20, rsiN: Int = 14,
-                 fast: Int = 12, slow: Int = 26, signalN: Int = 9,
-                 vwapHours: Int = 24): DataFrame = {
-    val aF = 2.0 / (fast + 1)
-    val aS = 2.0 / (slow + 1)
-    val aG = 2.0 / (signalN + 1)
-    val aW = 1.0 / rsiN
-
-    val collected = df.groupBy(col(keyCol)).agg(
-      array_sort(collect_list(struct(
-        col(tsCol).as("t"),
-        col(priceCol).cast("double").as("v"),
-        col(volCol).cast("double").as("w")))).as("series"))
-    val series = col("series")
-    val n = size(series)
-
-    // fold element == accumulator struct: prev carries the element's own
-    // price on input and the last-seen price inside the accumulator, so
-    // the first element IS the init state (ef/es seeded at x_1, signal at
-    // MACD_1 = 0, Wilder averages null until the first delta)
-    def foldElem(v: Column): Column = struct(
-      v.as("prev"), v.as("ef"), v.as("es"), lit(0.0).as("sig"),
-      lit(null).cast("double").as("au"), lit(null).cast("double").as("ad"))
-    val elems = transform(series, e => foldElem(e.getField("v")))
-    val folded = aggregate(
-      slice(elems, lit(2), n - 1),
-      element_at(elems, 1),
-      (acc, x) => {
-        val v = x.getField("prev")
-        // spelled as two subtractions (not u = max(d,0), dn = max(-d,0)):
-        // b-a and -(a-b) differ in sign on a == b, and the oracle replays
-        // these exact ops
-        val u = greatest(v - acc.getField("prev"), lit(0.0))
-        val dn = greatest(acc.getField("prev") - v, lit(0.0))
-        val ef = lit(aF) * v + lit(1 - aF) * acc.getField("ef")
-        val es = lit(aS) * v + lit(1 - aS) * acc.getField("es")
-        val m = ef - es
-        val sg = lit(aG) * m + lit(1 - aG) * acc.getField("sig")
-        val au = when(acc.getField("au").isNull, u)
-          .otherwise(lit(aW) * u + lit(1 - aW) * acc.getField("au"))
-        val ad = when(acc.getField("ad").isNull, dn)
-          .otherwise(lit(aW) * dn + lit(1 - aW) * acc.getField("ad"))
-        struct(v.as("prev"), ef.as("ef"), es.as("es"), sg.as("sig"),
-          au.as("au"), ad.as("ad"))
-      })
-
-    // SMA over the last min(n, smaN) prices: left fold from 0.0 — IEEE
-    // 0.0 + x == x, so DuckDB's init-from-first-element reduce matches
-    val smaLen = least(n, lit(smaN))
-    val smaSlice = slice(series, greatest(n - smaN + 1, lit(1)), smaLen)
-    val smaSum = aggregate(smaSlice, lit(0.0),
-      (acc, e) => acc + e.getField("v"))
-
-    // VWAP over ticks within vwapHours of the latest tick
-    val lastT = element_at(series, -1).getField("t")
-    val cutoff = lastT - expr(s"INTERVAL $vwapHours HOURS")
-    val recent = filter(series, e => e.getField("t") >= cutoff)
-    val sumPV = aggregate(recent, lit(0.0),
-      (acc, e) => acc + e.getField("v") * e.getField("w"))
-    val sumW = aggregate(recent, lit(0.0),
-      (acc, e) => acc + e.getField("w"))
-
-    val au = folded.getField("au")
-    val ad = folded.getField("ad")
-    val rsi = when(au.isNull, lit(null).cast("double"))
-      .when(ad === 0.0 && au === 0.0, lit(null).cast("double"))
-      .when(ad === 0.0, lit(100.0))
-      .otherwise(least(greatest(
-        lit(100.0) - lit(100.0) / (lit(1.0) + au / ad), lit(0.0)),
-        lit(100.0)))
-    val macd = folded.getField("ef") - folded.getField("es")
-    val sig = folded.getField("sig")
-
-    collected.select(
-      col(keyCol),
-      lastT.as("ts_last"),
-      n.cast("long").as("n_points"),
-      round(smaSum / smaLen, 6).as("sma"),
-      round(rsi, 6).as("rsi"),
-      round(macd, 6).as("macd"),
-      round(sig, 6).as("macd_signal"),
-      round(macd - sig, 6).as("macd_hist"),
-      round(sumPV / nullif(sumW, lit(0.0)), 6).as("vwap24"))
   }
 }

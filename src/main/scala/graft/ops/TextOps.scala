@@ -433,17 +433,11 @@ object TextOps {
   /** Winnowing-style fingerprint: min/max MD5 over character shingles.
     * MD5-hex is engine-portable (identical in Spark and DuckDB), so the
     * fingerprint doubles as an oracle-checkable rolling-hash surrogate.
-    */
-  /** Character shingles as an array column (shared by fingerprint + MinHash). */
-  def charShingles(textCol: String, shingle: Int): Column = expr(
-    s"transform(sequence(1, greatest(length($textCol) - ${shingle - 1}, 1))," +
-    s" i -> substring($textCol, i, $shingle))")
-
-  /** One-pass native kernel ([[graft.functions.Md5MinMaxShingles]]): the
-    * fingerprint is a scalar of the text, so it runs as a narrow codegen'd
-    * projection — no char-shingle explode (O(text length) rows/doc), no
-    * groupBy shuffle, and digests are compared as bytes with hex emitted
-    * once per doc. Output: idCol, fp_min, fp_max.
+    * The fingerprint is a scalar of the text, so it runs as a one-pass
+    * native kernel ([[graft.functions.Md5MinMaxShingles]]) in a narrow
+    * codegen'd projection — no char-shingle explode (O(text length)
+    * rows/doc), no groupBy shuffle, and digests are compared as bytes with
+    * hex emitted once per doc. Output: idCol, fp_min, fp_max.
     */
   def fingerprint(df: DataFrame, idCol: String = "doc_id",
                   textCol: String = "text", shingle: Int = 8): DataFrame =
@@ -451,15 +445,4 @@ object TextOps {
       .select(col(idCol), graft.functions.TextHashFunctions
         .md5_minmax(col(textCol), shingle).as("mm"))
       .select(col(idCol), col("mm.fp_min"), col("mm.fp_max"))
-
-  /** Declarative fingerprint twin (explode + groupBy min/max over
-    * `md5(shingle)`): retained for parity testing and as the SQL-shaped
-    * reference implementation (identical to the DuckDB oracle).
-    */
-  def fingerprintDeclarative(df: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text", shingle: Int = 8): DataFrame =
-    Rebalance(df)
-      .select(col(idCol), explode(charShingles(textCol, shingle)).as("s"))
-      .groupBy(col(idCol))
-      .agg(min(md5(col("s"))).as("fp_min"), max(md5(col("s"))).as("fp_max"))
 }

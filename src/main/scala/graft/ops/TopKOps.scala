@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending,
   SortOrder}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.plans.{TopKPerGroup, TopKPerGroupStrategy}
@@ -13,8 +11,8 @@ import graft.plans.{TopKPerGroup, TopKPerGroupStrategy}
   * custom [[graft.plans.TopKPerGroup]] plan: map-side bounded heaps,
   * shuffle only the per-partition survivors, re-heap per group — instead
   * of the window-function spelling's full shuffle + full sort of every
-  * row. Results are identical (TopKPlanSpec pins parity against
-  * [[windowTopK]]); the plan is what changes.
+  * row. Results are identical (TopKPlanSpec pins parity against the
+  * row_number twin, `ParityTwins.windowTopK`); the plan is what changes.
   */
 object TopKOps {
 
@@ -35,18 +33,5 @@ object TopKOps {
       SortOrder(attr(orderCol), if (descending) Descending else Ascending),
       SortOrder(attr(tieCol), Ascending))
     Bridge.ofRows(spark, TopKPerGroup(groupCols.map(attr), ord, k, plan))
-  }
-
-  /** The declarative twin — row_number over a window — kept as the parity
-    * reference and for engines/sessions where the custom strategy is
-    * unwanted.
-    */
-  def windowTopK(df: DataFrame, groupCols: Seq[String], orderCol: String,
-                 descending: Boolean, tieCol: String, k: Int): DataFrame = {
-    val o = if (descending) col(orderCol).desc else col(orderCol).asc
-    val w = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(o, col(tieCol).asc)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k).drop("_rn")
   }
 }

@@ -326,7 +326,7 @@ object PipelineQueries {
     // the aggregation — the r16 driver run showed array<struct> output
     // columns break its pandas row-sort (unhashable ndarray cells), so
     // catalog outputs stay scalar; the array<struct> shape itself is
-    // the ops/spec-level surface (MinKAggSpec struct-payload specs +
+    // the ops/spec-level surface (CoreOpsSpec struct-payload specs +
     // the prefix-twin invariant below). Overflow alignment (all three
     // a5 entries): a |v| >= 10^10 nulls the non-ANSI decimal(12,2)
     // render, and concat_ws/string_agg then drop that point from the

@@ -16,11 +16,6 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
-
   /** Wrap a custom LogicalPlan back into the public DataFrame API
     * (`Dataset.ofRows` went `private[sql]` in Spark 4). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

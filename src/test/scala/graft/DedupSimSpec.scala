@@ -1067,7 +1067,7 @@ class DedupSimSpec extends SparkSpec {
     // via the public sizing path is implicit (same numBits/numHashes),
     // so rebuild the words array the same way and apply the HOF form
     val setWords = eval
-      .select(explode(DedupOps.wordShingles("text", n)).as("g"))
+      .select(explode(ParityTwins.wordShingles("text", n)).as("g"))
       .select(explode(array((0 until numHashes).map(i =>
         conv(substring(md5(col("g")), i * 8 + 1, 8), 16, 10)
           .cast("long") % numBits): _*)).as("p"))
@@ -1086,7 +1086,7 @@ class DedupSimSpec extends SparkSpec {
     def posFromHex(h: Column): Seq[Column] = (0 until numHashes).map(i =>
       conv(substring(h, i * 8 + 1, 8), 16, 10).cast("long") % numBits)
     val declarative = train
-      .select(col("doc_id"), DedupOps.wordShingles("text", n).as("_gs"))
+      .select(col("doc_id"), ParityTwins.wordShingles("text", n).as("_gs"))
       .select(col("doc_id"), size(col("_gs")).cast("long").as("n_grams"),
         exists(transform(col("_gs"), g => md5(g)),
           h => posFromHex(h).map(isSet).reduce(_ && _)).as("bloom_hit"))
@@ -1136,7 +1136,7 @@ class DedupSimSpec extends SparkSpec {
     val eval = (1 to 100).map(i =>
       (10000L + i, s"eta$i theta$i iota$i kappa$i lambda$i mu$i"))
       .toDF("doc_id", "text")
-    val grams = eval.select(explode(DedupOps.wordShingles("text", 5)))
+    val grams = eval.select(explode(ParityTwins.wordShingles("text", 5)))
       .distinct().count()
     val auto = DedupOps.bloomDecontaminate(train, eval, n = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))

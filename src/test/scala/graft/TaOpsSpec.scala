@@ -95,9 +95,10 @@ class TaOpsSpec extends SparkSpec {
        "single-point series") {
     // r18 parity pin: taSnapshot moved from the interpreted Catalyst
     // transform/aggregate/filter fold to TaFoldKernel; the old fold is
-    // retained as taSnapshotDeclarative and must agree bit-for-bit —
-    // including the three-valued-logic poison a null volume injects into
-    // the VWAP sums (the reference's get_json_object-missing case).
+    // kept as ParityTwins.taSnapshotDeclarative and must agree
+    // bit-for-bit — including the three-valued-logic poison a null
+    // volume injects into the VWAP sums (the reference's
+    // get_json_object-missing case).
     val rows: Seq[(String, Timestamp, Double, java.lang.Double)] = Seq(
       ("a", ts(0), 10.0, java.lang.Double.valueOf(2.0)),
       ("a", ts(1), 12.0, null),
@@ -121,7 +122,7 @@ class TaOpsSpec extends SparkSpec {
           if (r.isNullAt(i)) null else r.get(i)).toList).toMap
     val kernel = dump(TaOps.taSnapshot(df, "sym", "t", "p", "vol"))
     val declarative = dump(
-      TaOps.taSnapshotDeclarative(df, "sym", "t", "p", "vol"))
+      ParityTwins.taSnapshotDeclarative(df, "sym", "t", "p", "vol"))
     assert(kernel === declarative)
     // the null vol poisons symbol a's vwap (null * price nulls the sum)
     assert(kernel("a").last == null)

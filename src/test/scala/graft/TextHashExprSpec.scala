@@ -24,7 +24,7 @@ class TextHashExprSpec extends SparkSpec {
   test("native simhash matches declarative bit votes exactly") {
     val native = DedupOps.simhash(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val decl = DedupOps.simhashDeclarative(docs).collect()
+    val decl = ParityTwins.simhashDeclarative(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native === decl)
   }
@@ -33,7 +33,7 @@ class TextHashExprSpec extends SparkSpec {
     val k = 16
     val native = DedupOps.minhashSignatures(docs, "doc_id", "text", 3, k)
       .collect().map(r => r.getLong(0) -> (1 to k).map(r.getString)).toMap
-    val decl = DedupOps
+    val decl = ParityTwins
       .minhashSignaturesDeclarative(docs, "doc_id", "text", 3, k)
       .collect().map(r => r.getLong(0) -> (1 to k).map(r.getString)).toMap
     assert(native === decl)
@@ -44,18 +44,18 @@ class TextHashExprSpec extends SparkSpec {
     def sets(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(sets(DedupOps.winnowFingerprints(docs)) ===
-      sets(DedupOps.winnowFingerprintsDeclarative(docs)))
+      sets(ParityTwins.winnowFingerprintsDeclarative(docs)))
     // real corpus slice: longer docs, many windows, tie opportunities
     val corpus = Tables.documents(spark, "/root/testdata/sf0.001")
       .limit(60)
     assert(sets(DedupOps.winnowFingerprints(corpus)) ===
-      sets(DedupOps.winnowFingerprintsDeclarative(corpus)))
+      sets(ParityTwins.winnowFingerprintsDeclarative(corpus)))
   }
 
   test("native fingerprint matches declarative min/max md5 exactly") {
     val native = TextOps.fingerprint(docs).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    val decl = TextOps.fingerprintDeclarative(docs).collect()
+    val decl = ParityTwins.fingerprintDeclarative(docs).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
     assert(native === decl)
   }
@@ -94,7 +94,7 @@ class TextHashExprSpec extends SparkSpec {
         .select($"doc_id", c.as("sh")).collect()
         .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       assert(arrs(DedupOps.wordShinglesKernel("text", n)) ===
-        arrs(DedupOps.wordShingles("text", n)), s"n=$n")
+        arrs(ParityTwins.wordShingles("text", n)), s"n=$n")
     }
     // real corpus slice + trailing/double-space edge rows
     val corpus = Tables.documents(spark, "/root/testdata/sf0.001").limit(60)
@@ -105,7 +105,7 @@ class TextHashExprSpec extends SparkSpec {
       .select($"doc_id", c.as("sh")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(sets(DedupOps.wordShinglesKernel("text", 3)) ===
-      sets(DedupOps.wordShingles("text", 3)))
+      sets(ParityTwins.wordShingles("text", 3)))
     // null text -> null array, like the declarative column
     val withNull = Seq((1L, "a b c"), (2L, null)).toDF("doc_id", "text")
     val out = withNull

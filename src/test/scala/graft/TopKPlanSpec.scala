@@ -29,7 +29,7 @@ class TopKPlanSpec extends SparkSpec {
       for (k <- Seq(1, 3, 10); desc <- Seq(true, false)) {
         val a = TopKOps.topKPerGroup(df, Seq("grp"), "value", desc, "id", k)
           .collect().map(_.toSeq).sortBy(_.toString)
-        val b = TopKOps.windowTopK(df, Seq("grp"), "value", desc, "id", k)
+        val b = ParityTwins.windowTopK(df, Seq("grp"), "value", desc, "id", k)
           .collect().map(_.toSeq).sortBy(_.toString)
         assert(a.toSeq === b.toSeq, s"k=$k desc=$desc")
       }

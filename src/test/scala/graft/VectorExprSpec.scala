@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
-class VectorExprSpec extends SparkSpec {
+class VectorExprSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val hofDot = (a: org.apache.spark.sql.Column,
@@ -37,7 +38,8 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("dot_product is SQL-registrable") {
-    VectorFunctions.register(spark)
+    org.apache.spark.sql.FunctionRegistryAccess.register(spark,
+      GraftExtensions.dotProductDescriptor)
     val out = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .collect().head.getDouble(0)
@@ -60,6 +62,89 @@ class VectorExprSpec extends SparkSpec {
       VectorFunctions.sq_dist_long($"a", $"b").as("native"),
       hof.as("hof")).collect()
     out.foreach(r => assert(r.getLong(0) === r.getLong(1)))
+
+    // every vector kernel, both ways: Expression.eval on literals
+    // (interpreted), then a whole-stage-codegen DataFrame projection
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      Expression, Literal}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import graft.functions.{ArgMinSqDist, DotProduct, SqDistLong}
+    def arr(dt: DataType, xs: Any*) =
+      Literal(new GenericArrayData(xs.toArray), ArrayType(dt))
+    def mat(rows: Seq[Long]*) = new GenericArrayData(
+      rows.map(r => new GenericArrayData(r.toArray[Any]): Any).toArray)
+    val matType = ArrayType(ArrayType(LongType))
+    def argmin(e: Expression, row: InternalRow = null) =
+      e.eval(row).asInstanceOf[InternalRow] match {
+        case null => None
+        case r => Some((r.getInt(0), r.getLong(1)))
+      }
+    // dot products: the null element contributes 0
+    val fA = arr(FloatType, 1.5f, null, -2.0f, 0.25f)
+    val fB = arr(FloatType, 2.0f, 7.0f, 3.0f, 4.0f)
+    val dA = arr(DoubleType, 0.5, 2.0, null)
+    val dB = arr(DoubleType, 4.0, -1.5, 8.0, 9.0)
+    assert(DotProduct(fA, fB).eval(null) === -2.0)
+    assert(DotProduct(dA, dB).eval(null) === -1.0)
+    assert(DotProduct(fB, dB).eval(null) === 57.5)
+    assert(SqDistLong(arr(LongType, 3L, -1L, 10L),
+      arr(LongType, 1L, 2L, 10L, 99L)).eval(null) === 13L)
+    // argmin: query dim 1 is null (skipped), positions 2 and 3 tie at
+    // distance 0 and the lower one wins; the matrix is a foldable
+    // literal (hoisted long[][]) or a bound column (generic path)
+    val cents = Seq(Seq(5L, 5L, 5L), Seq(1L, 1L, 9L), Seq(1L, 1L, 1L),
+      Seq(1L, 1L, 1L))
+    val q = arr(LongType, 1L, null, 1L)
+    val folded = ArgMinSqDist(q, Literal(mat(cents: _*), matType))
+    val bound = ArgMinSqDist(q, BoundReference(0, matType, nullable = true))
+    assert(argmin(folded) === Some((2, 0L)))
+    assert(argmin(bound, InternalRow(mat(cents: _*))) === Some((2, 0L)))
+    assert(argmin(ArgMinSqDist(arr(LongType, 2L, 2L, 2L),
+      Literal(mat(cents: _*), matType))) === Some((2, 3L)))
+    assert(argmin(bound, InternalRow(mat())) === None)
+
+    val kernels = Seq(
+      (Seq[Option[Float]](Some(1.5f), None, Some(-2.0f), Some(0.25f)),
+        Seq(2.0f, 7.0f, 3.0f, 4.0f), Seq[Option[Double]](Some(0.5),
+          Some(2.0), None), Seq(4.0, -1.5, 8.0, 9.0),
+        Seq[Option[Long]](Some(1L), None, Some(1L)), Seq(2L, 2L, 2L),
+        Seq(3L, -1L, 10L), Seq(1L, 2L, 10L, 99L), 0L))
+      .toDF("fa", "fb", "da", "db", "q", "q2", "la", "lb", "id")
+    val projected = kernels.repartition(1).select(
+      VectorFunctions.dot_product($"fa", $"fb"),
+      VectorFunctions.dot_product($"da", $"db"),
+      VectorFunctions.dot_product($"fb", $"db"),
+      VectorFunctions.sq_dist_long($"la", $"lb"),
+      VectorFunctions.argmin_sq_dist($"q", typedLit(cents)),
+      VectorFunctions.argmin_sq_dist($"q",
+        when($"id" >= 0, typedLit(cents))),
+      VectorFunctions.argmin_sq_dist($"q2", typedLit(cents)))
+    // no silent fallback: a generated call that does not compile fails
+    val fallback = "spark.sql.codegen.fallback"
+    val prior = spark.conf.get(fallback)
+    spark.conf.set(fallback, "false")
+    val (got, runs) =
+      try ExecutedPlans.capture(spark)(projected.collect().head)
+      finally spark.conf.set(fallback, prior)
+    val kernelClasses = Set[Class[_]](classOf[DotProduct],
+      classOf[SqDistLong], classOf[ArgMinSqDist])
+    val inCodegen = runs.flatMap(r => collect(r.plan) {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+        w.child.expressions.flatMap(_.collect {
+          case e if kernelClasses(e.getClass) => e.getClass })
+    }).flatten.toSet
+    assert(inCodegen === kernelClasses,
+      runs.map(_.plan.toString).mkString("\n"))
+    def pair(i: Int) = { val s = got.getStruct(i); (s.getInt(0), s.getLong(1)) }
+    assert(got.getDouble(0) === -2.0)
+    assert(got.getDouble(1) === -1.0)
+    assert(got.getDouble(2) === 57.5)
+    assert(got.getLong(3) === 13L)
+    assert(pair(4) === (2, 0L))
+    assert(pair(5) === (2, 0L))
+    assert(pair(6) === (2, 3L))
   }
 
   test("quantize_vec matches the declarative round(v*1e6) transform " +
